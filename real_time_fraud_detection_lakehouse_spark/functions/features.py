@@ -178,30 +178,33 @@ def risk_level(score: Column) -> Column:
     )
 
 
-def with_silver_features(
-    df: DataFrame, ts_col: str = "trans_timestamp", round_digits: int | None = 6
-) -> DataFrame:
+#: Decimal digits the transcendental silver features are rounded to;
+#: the DuckDB oracle (plans/silver.SILVER_CTE) rounds identically.
+SILVER_ROUND_DIGITS = 6
+
+
+def with_silver_features(df: DataFrame) -> DataFrame:
     """Apply the full silver feature block (silver_job.py:50-104
     semantics) to a typed transactions DataFrame.
 
     Input must carry: lat, long, merch_lat, merch_long, dob, amt,
-    gender and the ``ts_col`` timestamp. Adds 14 engineered columns +
-    year/month/day partition columns. Pure projection — no shuffle.
+    gender and the ``trans_timestamp`` timestamp. Adds 14 engineered
+    columns + year/month/day partition columns. Pure projection — no
+    shuffle.
 
-    ``round_digits`` (default 6) rounds the transcendental features
-    (distance_km, hour_sin/cos, log_amount) with a deterministic
-    floor-based rounding so results are bit-identical to the DuckDB
-    oracle regardless of libm ulp differences; dependent flags
-    (is_distant_transaction) are computed from the rounded value so
-    threshold rows can never flip between engines. Pass None for the
-    reference's raw (unrounded) semantics.
+    The transcendental features (distance_km, hour_sin/cos,
+    log_amount) are rounded to ``SILVER_ROUND_DIGITS`` with a
+    deterministic floor-based rounding so results are bit-identical to
+    the DuckDB oracle regardless of libm ulp differences; dependent
+    flags (is_distant_transaction) are computed from the rounded value
+    so threshold rows can never flip between engines.
     """
     from real_time_fraud_detection_lakehouse_spark.sources.transactions import dround
 
     def _r(col: Column) -> Column:
-        return dround(col, round_digits) if round_digits is not None else col
+        return dround(col, SILVER_ROUND_DIGITS)
 
-    ts = F.col(ts_col)
+    ts = F.col("trans_timestamp")
     hour = F.hour(ts)
     dow = F.dayofweek(ts)
     dist_raw = haversine_km(F.col("lat"), F.col("long"), F.col("merch_lat"), F.col("merch_long"))

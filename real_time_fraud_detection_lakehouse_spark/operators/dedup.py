@@ -24,13 +24,13 @@ validated in tests/test_llm_ops.py against exact Jaccard ground truth.
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from real_time_fraud_detection_lakehouse_spark.core.catalog import spread_small_input
+from real_time_fraud_detection_lakehouse_spark.core.shared import shared
 from real_time_fraud_detection_lakehouse_spark.sources.transactions import dround, dround_sql
 
 Frames = dict[str, DataFrame]
@@ -446,15 +446,21 @@ def dedup_containment_global(t: Frames) -> DataFrame:
     at 100 TB the df table is the standing corpus statistic the
     nightly index publishes.
 
-    r17: the verified pair stream is the in-session shared surface for
-    this op and its two consumers (``docs_dedup_containment_global_apply``,
-    ``docs_containment_by_source``) — see ``_containment_shared``."""
-    return _containment_shared(t)
+    The verified pair stream is a session-shared surface
+    (``core.shared``, keyed on the ``documents`` frame) for this op and
+    its two consumers (``docs_dedup_containment_global_apply``,
+    ``docs_containment_by_source``), so the probe join runs once per
+    corpus frame."""
+    return shared(
+        t["documents"],
+        "containment_global",
+        lambda: _containment_global_build(t).persist(),
+    )
 
 
 def _containment_global_build(t: Frames) -> DataFrame:
-    """The fallback (and only) builder of the global containment pair
-    stream — the plan described on ``dedup_containment_global``."""
+    """The un-shared builder of the global containment pair stream —
+    the plan described on ``dedup_containment_global``."""
     docs = (
         _gram_projection(t)
         .select("doc_id", "grams")
@@ -507,48 +513,6 @@ def _containment_global_build(t: Frames) -> DataFrame:
             >= CONTAINMENT_MIN
         )
     )
-
-
-#: In-session share of the verified GLOBAL containment pair stream
-#: (r17, the plans/dashboards._HUB_SHARED discipline — r16 verdict #3):
-#: three registered entries consume exactly this surface
-#: (dedup_containment_global itself, the global apply, the by-source
-#: rollup), and each previously re-ran the df aggregate + ranking
-#: window + probe⋈postings join + pair distinct + exact verify from
-#: scratch (~8.5 s of the bench suite on one intermediate; at 100 TB
-#: the repeated probe-join term triples). Keyed WEAKLY on the
-#: ``documents`` DataFrame — core.catalog.table() memoizes frames per
-#: (session, path), so every entry over one testdata dir sees the same
-#: object and the share is automatic; a test building its own frame
-#: gets its own entry. persist() holds JVM CacheManager blocks until an
-#: EXPLICIT unpersist, so a ``weakref.finalize`` on the keying frame
-#: releases them when the frame is collected. Compute-on-miss IS the
-#: fallback build (same builder — semantics identical by construction;
-#: shared-vs-fresh equality pinned in tests/test_llm_ops.py). NOT
-#: cross-run caching: the share lives and dies with the session, and
-#: every build computes from the parquet inputs.
-_CONTAINMENT_SHARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _containment_shared(t: Frames) -> DataFrame:
-    docs = t["documents"]
-    try:
-        cached = _CONTAINMENT_SHARED.get(docs)
-    except TypeError:  # frame not weak-referenceable → no share
-        return _containment_global_build(t)
-    if cached is None:
-        cached = _containment_global_build(t).persist()
-        _CONTAINMENT_SHARED[docs] = cached
-        # callback must not (and does not) close over ``docs``
-        weakref.finalize(docs, _containment_shared_release, cached)
-    return cached
-
-
-def _containment_shared_release(pairs: DataFrame) -> None:
-    try:
-        pairs.unpersist()
-    except Exception:
-        pass  # session already stopped — nothing left to free
 
 
 @_register("docs_dedup_containment_global_apply", None)  # SQL bound below

@@ -15,11 +15,10 @@ Same registry shape as plans/views.py; builders receive the gold dict
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from real_time_fraud_detection_lakehouse_spark.core.shared import shared
 from real_time_fraud_detection_lakehouse_spark.functions.features import (
     risk_level,
     rule_fraud_score,
@@ -838,78 +837,42 @@ def _ring_pair_frame(g, min_links: int) -> DataFrame:
     return ring_pairs_from_links(ring_links(g["transactions"]), min_links)
 
 
-#: In-session share of the STRONG pair stream + its connected
-#: components across the four ring dashboards (r14 verdict #1: each
-#: previously recomputed the pair self-join + CC from scratch — ~21.5 s
-#: of the 132-entry bench suite spent on one intermediate, and at 100x
-#: the repeated pair-stream term multiplies by four). Keyed WEAKLY on
-#: the transactions DataFrame object — gold_frames() memoizes frames
-#: per (session, sf_dir), so every dashboard call over one medallion
-#: sees the same object and the share is automatic; a test that builds
-#: its own frames gets its own entry. persist() registers the plan
-#: with the session CacheManager, which holds a JVM reference until an
-#: EXPLICIT unpersist (GC of the Python DataFrame does NOT release the
-#: cached blocks — r15 advice), so a ``weakref.finalize`` on the
-#: keying frame unpersists both intermediates the moment the medallion
-#: goes away; long-lived sessions touching many medallions (test
-#: suites, multi-SF benches) therefore don't accrete cached blocks.
-#: Compute-on-miss IS the recompute fallback: semantics are identical
-#: by construction (same builders), pinned shared-vs-fresh in
-#: tests/test_views.py. The published-store twin of this intermediate
-#: (compact_ring_links / ring_pairs_from_published,
-#: streaming/scoring.py) remains the cross-SESSION production path.
-_RING_SHARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def _ring_shared(g, with_comp: bool = True) -> dict[str, DataFrame]:
-    """The shared intermediate for the ring family: ``pairs_all`` =
-    hub-capped pair stream at the BASE support floor (persisted —
-    r16: the pair self-join is computed once for dash_fraud_ring_pairs
-    AND the strong family), ``pairs`` = the strong-support subset (a
-    lazy filter over the persisted base — HAVING n >= 7 ≡ n >= 5 AND
+    """The session-shared ring intermediates (``core.shared``), keyed
+    on the medallion's transactions frame: ``pairs_all`` = hub-capped
+    pair stream at the BASE support floor (persisted — the pair
+    self-join is computed once for dash_fraud_ring_pairs AND the
+    strong family), ``pairs`` = the strong-support subset (a lazy
+    filter over the persisted base — HAVING n >= 7 ≡ n >= 5 AND
     n >= 7, so rows are identical to a fresh strong-support build),
     ``comp`` = (cc_num, ring_id) membership from min-label CC over the
     strong subset (persisted). ``with_comp=False`` consumers (the pair
-    screen) never trigger the CC iterations."""
+    screen) never trigger the CC iterations. The published-store twin
+    (compact_ring_links / ring_pairs_from_published,
+    streaming/scoring.py) remains the cross-SESSION production path."""
     from real_time_fraud_detection_lakehouse_spark.operators.dedup import (
         connected_components,
     )
 
     tx = g["transactions"]
-    cached = _RING_SHARED.get(tx)
-    if cached is None:
-        pairs_all = _ring_pair_frame(g, RING_SUPPORT).persist()
-        cached = {
-            "pairs_all": pairs_all,
-            "pairs": pairs_all.filter(
-                F.col("n_links") >= RING_STRONG_SUPPORT
-            ),
-        }
-        _RING_SHARED[tx] = cached
-        # release the CacheManager blocks when the keying medallion is
-        # collected — the WeakKeyDictionary only drops OUR entry; the
-        # JVM-side cache needs the explicit unpersist (r15 advice). The
-        # callback must not (and does not) close over ``tx``.
-        weakref.finalize(tx, _ring_shared_release, pairs_all)
-    if with_comp and "comp" not in cached:
-        comp = (
-            connected_components(cached["pairs"], src="card_a", dst="card_b")
-            .select(
-                F.col("node").alias("cc_num"), F.col("component").alias("ring_id")
-            )
-            .persist()
+    pairs_all = shared(
+        tx, "ring_pairs_all", lambda: _ring_pair_frame(g, RING_SUPPORT).persist()
+    )
+    pairs = shared(
+        tx,
+        "ring_pairs",
+        lambda: pairs_all.filter(F.col("n_links") >= RING_STRONG_SUPPORT),
+    )
+    out = {"pairs_all": pairs_all, "pairs": pairs}
+    if with_comp:
+        out["comp"] = shared(
+            tx,
+            "ring_comp",
+            lambda: connected_components(pairs, src="card_a", dst="card_b")
+            .select(F.col("node").alias("cc_num"), F.col("component").alias("ring_id"))
+            .persist(),
         )
-        cached["comp"] = comp
-        weakref.finalize(tx, _ring_shared_release, comp)
-    return cached
-
-
-def _ring_shared_release(*frames: DataFrame) -> None:
-    try:
-        for f in frames:
-            f.unpersist()
-    except Exception:
-        pass  # session already stopped — nothing left to free
+    return out
 
 
 @_register(
@@ -1128,9 +1091,9 @@ def dash_ring_triangles(g) -> DataFrame:
     the ring_id on vertex ``a`` is exact, not an approximation. Pair
     stream + membership come from the session-shared persisted
     intermediate (``_ring_shared``, r15)."""
-    shared = _ring_shared(g)
-    pairs = shared["pairs"].select("card_a", "card_b")
-    comp = shared["comp"]
+    ring = _ring_shared(g)
+    pairs = ring["pairs"].select("card_a", "card_b")
+    comp = ring["comp"]
     e1 = pairs.select(F.col("card_a").alias("a"), F.col("card_b").alias("b"))
     e2 = pairs.select(F.col("card_a").alias("b"), F.col("card_b").alias("c"))
     e3 = pairs.select(F.col("card_a").alias("a"), F.col("card_b").alias("c"))
@@ -1594,40 +1557,20 @@ def _rp_risk_frames(
     return risks, seed
 
 
-#: Session-shared persisted PR/RP score surfaces (r17 — the
-#: _HUB_SHARED discipline one layer down): five timed screens and the
-#: mule-hub build re-ran the SAME unrolled graph recurrences from
-#: scratch — dash_merchant_centrality (2-round PR),
-#: dash_centrality_convergence (3-round PR), dash_card_hubs (card side
-#: of the 2-round PR), dash_merchant_risk_propagation (2-round RP),
-#: dash_rp_convergence (3-round RP), plus the PR+RP pair inside
-#: _mule_hubs_fresh. Each recurrence round is two edge-keyed joins +
-#: keyed aggs over the edge projection; the RESULTS are O(merchants) /
-#: O(cards) rows — tiny to pin. The audit-depth build subsumes the
-#: production depth (risks[r]/m_ranks[r] are the same lineage prefix
-#: at any requested depth, so round-2 values from a 3-round build are
-#: bit-identical to a 2-round build by construction). The r16 negative
-#: result on persisting the edge/seed INPUTS (COVERAGE.md 21.1→35.3 s)
-#: was the opposite profile — cheap-to-recompute mid-plan barrier;
-#: this pins the expensive-to-recompute OUTPUT, the profile that won
-#: for hubs/rings/containment. Weak-keyed on the medallion frame,
-#: weakref.finalize unpersist, compute-on-miss IS the fallback build;
-#: override consumers (maintained-graph monitors) bypass entirely.
-#: Shared-vs-fresh equality pinned in tests/test_views.py.
-_PR_SHARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-_RP_SHARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _pr_shared_surfaces(g, want_cards: bool = False):
-    """{"m": (merchant, n, rank_prod, rank_audit, degm), "c": (cc_num,
-    n, rank_prod, degc)} persisted once per medallion; "c" is added on
-    first card-side demand (the _ring_shared "comp" idiom)."""
+def _pr_shared_surfaces(g, want_cards: bool = False) -> dict[str, DataFrame]:
+    """The session-shared PageRank surfaces (``core.shared``), keyed
+    on the medallion's transactions frame: "m" = (merchant, n,
+    rank_prod, rank_audit, degm), "c" = (cc_num, n, rank_prod, degc),
+    built on first card-side demand. One audit-depth build serves
+    both depths: m_ranks[r] is the same lineage prefix at any
+    requested depth, so its round-2 values are bit-identical to a
+    2-round build. Override consumers (maintained-graph monitors)
+    bypass the share and run the per-screen recurrence."""
     tx = g["transactions"]
-    cached = _PR_SHARED.get(tx)
-    if cached is None:
+
+    def merchants() -> DataFrame:
         m_ranks, degm = _pr_rank_frames(g, PR_AUDIT_ROUNDS)[:2]
-        m = (
+        return (
             m_ranks[PR_ROUNDS - 1]
             .select("merchant", "n", F.col("rank").alias("rank_prod"))
             .join(
@@ -1639,26 +1582,26 @@ def _pr_shared_surfaces(g, want_cards: bool = False):
             .join(degm, "merchant")
             .persist()
         )
-        cached = {"m": m}
-        _PR_SHARED[tx] = cached
-        weakref.finalize(tx, _ring_shared_release, m)
-    if want_cards and "c" not in cached:
-        out = _pr_rank_frames(g, PR_ROUNDS)
-        c_rank, degc = out[2][-1], out[3]
-        c = c_rank.join(degc, "cc_num").persist()
-        cached["c"] = c
-        weakref.finalize(g["transactions"], _ring_shared_release, c)
-    return cached
+
+    def cards() -> DataFrame:
+        frames = _pr_rank_frames(g, PR_ROUNDS)
+        c_rank, degc = frames[2][-1], frames[3]
+        return c_rank.join(degc, "cc_num").persist()
+
+    out = {"m": shared(tx, "pr_merchants", merchants)}
+    if want_cards:
+        out["c"] = shared(tx, "pr_cards", cards)
+    return out
 
 
-def _rp_shared_surface(g):
-    """(merchant, risk0, risk_prod, risk_audit) persisted once per
-    medallion — production AND audit depths of the risk recurrence."""
-    tx = g["transactions"]
-    cached = _RP_SHARED.get(tx)
-    if cached is None:
+def _rp_shared_surface(g) -> DataFrame:
+    """(merchant, risk0, risk_prod, risk_audit) shared per medallion
+    (``core.shared``) — production AND audit depths of the risk
+    recurrence from one audit-depth build."""
+
+    def build() -> DataFrame:
         risks, seed = _rp_risk_frames(g, RP_AUDIT_ROUNDS)
-        cached = (
+        return (
             risks[RISK_ROUNDS - 1]
             .select("merchant", F.col("risk").alias("risk_prod"))
             .join(
@@ -1670,9 +1613,8 @@ def _rp_shared_surface(g):
             .join(seed, "merchant")
             .persist()
         )
-        _RP_SHARED[tx] = cached
-        weakref.finalize(tx, _ring_shared_release, cached)
-    return cached
+
+    return shared(g["transactions"], "rp_merchants", build)
 
 
 @_register(
@@ -1709,7 +1651,7 @@ def dash_merchant_risk_propagation(
     if edges is None and seed is None:
         # r17: production depth read from the shared RP surface —
         # risk_prod there is the identical round-2 lineage prefix of
-        # the audit-depth build (see _RP_SHARED)
+        # the audit-depth build (see _rp_shared_surface)
         return _rp_shared_surface(g).select(
             "merchant",
             _r4(F.col("risk0")).alias("seed_risk"),
@@ -1982,7 +1924,7 @@ def dash_merchant_centrality(g, edges: DataFrame | None = None) -> DataFrame:
     if edges is None:
         # r17: production depth read from the shared PR surface —
         # rank_prod is the identical round-2 lineage prefix of the
-        # audit-depth build (see _PR_SHARED)
+        # audit-depth build (see _pr_shared_surfaces)
         return _pr_shared_surfaces(g)["m"].select(
             "merchant",
             F.col("degm").alias("n_cards"),
@@ -2166,32 +2108,16 @@ def dash_mule_hubs(
     columns in both engines, so the boundary comparisons agree
     bit-for-bit."""
     if edges is None and seed is None:
-        # Session-shared persisted hub surface (r16, guide §5 "reused
-        # AND expensive to recompute"): three timed screens consume
-        # this exact frame (this one, dash_ring_hub_exposure,
-        # dash_ring_hub_trend), and each recomputation walks BOTH
-        # unrolled graph chains (2-round PR + 2-round RP, ~8 keyed
-        # joins/aggs over the edge projection) plus the median split —
-        # while the RESULT is a filtered O(merchants) surface, tiny to
-        # pin. The r16 negative result on sharing the (edges, seed)
-        # INPUTS (COVERAGE.md: 21.1 s → 35.3 s, persist barrier beats
-        # the cheap re-collapse) is the opposite profile: cheap to
-        # recompute, mid-plan barrier. The _RING_SHARED discipline
-        # applies — weak-keyed on the medallion, compute-on-miss IS the
-        # fallback, finalizer unpersists the CacheManager blocks.
-        # Override consumers (maintained-graph monitors) bypass the
-        # share entirely.
-        tx = g["transactions"]
-        cached = _HUB_SHARED.get(tx)
-        if cached is None:
-            cached = _mule_hubs_fresh(g, None, None).persist()
-            _HUB_SHARED[tx] = cached
-            weakref.finalize(tx, _ring_shared_release, cached)
-        return cached
+        # session-shared (core.shared): three timed screens read this
+        # exact frame (this one, dash_ring_hub_exposure,
+        # dash_ring_hub_trend); override consumers (maintained-graph
+        # monitors) bypass the share
+        return shared(
+            g["transactions"],
+            "mule_hubs",
+            lambda: _mule_hubs_fresh(g, None, None).persist(),
+        )
     return _mule_hubs_fresh(g, edges, seed)
-
-
-_HUB_SHARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _mule_hubs_fresh(g, edges, seed) -> DataFrame:

@@ -34,8 +34,8 @@ from real_time_fraud_detection_lakehouse_spark.plans.silver import silver_prelud
 
 def fact_transactions(silver: DataFrame) -> DataFrame:
     """Fact projection (gold_job.py:192-217), minus the two
-    current_timestamp audit columns (nondeterministic; add them at
-    write time via ``with_audit``)."""
+    current_timestamp audit columns (nondeterministic, so they must not
+    enter oracle-compared output; a writer adds them at write time)."""
     ts = F.col("trans_timestamp")
     return silver.select(
         F.col("trans_num").alias("transaction_key"),

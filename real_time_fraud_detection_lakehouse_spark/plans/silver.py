@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_fraud_detection_lakehouse_spark.core.catalog import spread_small_input
 from real_time_fraud_detection_lakehouse_spark.functions.features import with_silver_features
 from real_time_fraud_detection_lakehouse_spark.sources.transactions import (
     TRANSACTIONS_CTE,
@@ -58,39 +59,57 @@ SILVER_FEATURES = [
 ]
 
 
+#: Payload fields the change stream carries as strings (bronze keeps
+#: them raw, core/schemas.py) → the type ``transactions_df`` gives them.
+#: ``dob`` arrives as epoch days and is handled apart.
+_PAYLOAD_TYPES = {
+    "cc_num": "bigint",
+    "zip": "int",
+    "lat": "double",
+    "long": "double",
+    "city_pop": "bigint",
+    "unix_time": "bigint",
+    "merch_lat": "double",
+    "merch_long": "double",
+    "is_fraud": "int",
+}
+
+
+def _typed_payload(df: DataFrame) -> DataFrame:
+    """Cast the string payload columns of a bronze table to the typed
+    source's types. Columns that are already typed are left alone, so a
+    typed source gets no projection at all."""
+    strings = {name for name, dtype in df.dtypes if dtype == "string"}
+    casts = {c: F.col(c).cast(t) for c, t in _PAYLOAD_TYPES.items() if c in strings}
+    if "dob" in strings:
+        casts["dob"] = F.date_from_unix_date(F.col("dob").cast("int"))
+    return df.withColumns(casts) if casts else df
+
+
 def build_silver(
     spark: SparkSession,
     sf_dir: str | None = None,
     source: DataFrame | None = None,
-    round_digits: int | None = 6,
-    with_audit: bool = False,
 ) -> DataFrame:
-    """Typed, feature-engineered silver DataFrame.
+    """Typed, feature-engineered silver DataFrame over ``source`` (a
+    bronze table or a typed transactions frame), or over the
+    transactions of ``sf_dir``.
 
-    ``with_audit`` adds the reference's ``ingestion_time``
-    current_timestamp column (silver_job.py:101) — off by default
-    because it is nondeterministic and must not enter oracle-compared
-    output.
+    The reference's ``ingestion_time`` audit column
+    (silver_job.py:101) is not added: it is nondeterministic and must
+    not enter oracle-compared output.
     """
-    df = source if source is not None else transactions_df(spark, sf_dir)
     if source is None:
-        # Small-input parallelism floor: a single-row-group parquet
-        # file scans as ONE task, and this whole layer is narrow, so
-        # without a split the entire JSON+feature pipeline runs on one
-        # core (measured 2.3x at sf0.1). At 100 TB the scan has
-        # thousands of row-group splits and this guard is a no-op —
-        # the exchange only appears when the input is smaller than the
-        # cluster (round-robin of RAW source rows, before the heavy
-        # projection).
-        p = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < p:
-            df = df.repartition(p)
+        # small-input parallelism floor: the whole layer is narrow, so a
+        # single-row-group testdata file would otherwise run the entire
+        # JSON+feature pipeline on one core (measured 2.3x at sf0.1)
+        df = spread_small_input(transactions_df(spark, sf_dir))
+    else:
+        df = source
     df = df.filter(F.col("trans_num").isNotNull())
+    df = _typed_payload(df)
     df = df.fillna(FILLNA)
-    df = with_silver_features(df, round_digits=round_digits)
-    if with_audit:
-        df = df.withColumn("ingestion_time", F.current_timestamp())
-    return df
+    return with_silver_features(df)
 
 
 def _haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:

@@ -233,84 +233,68 @@ def upsert_by_key(
     Single-process local mode is safe; on a real cluster use the Delta
     MERGE (transaction-logged) instead of this emulation.
     """
-    keys = updates.select(key).distinct()
+    existing = _existing_slice(spark, updates, path, partition_col)
+    _merge(updates, path, key, partition_col, existing)
+
+
+def _existing_slice(
+    spark: SparkSession, updates: DataFrame, path: str, partition_col: str | None
+) -> DataFrame | None:
+    """The part of the table at ``path`` an upsert of ``updates`` can
+    touch, or ``None`` when there is nothing to merge against (no
+    table yet, or every touched partition is new).
+
+    With ``partition_col``: ONLY the touched partition dirs, read
+    explicitly (``basePath`` keeps the partition column in the
+    schema). At scale this prunes the file LISTING itself, not just
+    the post-listing scan — and it is what makes disjoint-partition
+    writers safe to run concurrently. When a touched value's directory
+    rendering is not reproducible, the whole table is read instead:
+    treating an existing partition as new could drop its rows.
+    Without ``partition_col``: the whole table."""
     if partition_col is not None:
         parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
         try:
-            existing_dirs = _partition_dirs(path, partition_col, parts)
+            dirs = _partition_dirs(path, partition_col, parts)
         except _UnresolvablePartition:
-            # a touched value's directory rendering is not reproducible
-            # — merging against the full table is the only safe read
-            # (treating the partition as new could drop existing rows)
-            _full_partitioned_merge(spark, updates, path, key, partition_col)
-            return
-        if not os.path.isdir(path) or not existing_dirs:
-            # no table yet, or all touched partitions are new: the
-            # update IS the partition content — dynamic overwrite
-            # creates/replaces only those directories
-            (
-                updates.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(partition_col)
-                .parquet(path)
-            )
-            return
-        # narrow read: ONLY the touched partition dirs (basePath keeps
-        # the partition column in the schema). At scale this prunes the
-        # file LISTING itself, not just the post-listing scan — and it
-        # is what makes disjoint-partition writers safe to run
-        # concurrently.
-        touched = spark.read.option("basePath", path).parquet(*existing_dirs)
-        kept = touched.join(F.broadcast(keys), key, "left_anti")
-        merged = kept.unionByName(updates.select(*kept.columns))
-        staged = merged.localCheckpoint(eager=True)
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-        return
+            dirs = None
+        if dirs is not None:
+            return spark.read.option("basePath", path).parquet(*dirs) if dirs else None
     try:
-        existing = spark.read.parquet(path)
-    except AnalysisException:  # only "no table yet" -> initial write
-        updates.write.mode("overwrite").parquet(path)
-        return
-    kept = existing.join(F.broadcast(keys), key, "left_anti")
-    merged = kept.unionByName(updates)
-    # materialize BEFORE overwriting the files being read —
-    # localCheckpoint(eager) cuts lineage to stored blocks, so the
-    # rewrite can't consume its own output (cache() could still evict
-    # and recompute from the overwritten files)
-    staged = merged.localCheckpoint(eager=True)
-    staged.write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+    except AnalysisException:  # only "no table yet"
+        return None
 
 
-def _full_partitioned_merge(
-    spark: SparkSession, updates: DataFrame, path: str, key: str, partition_col: str
+def _merge(
+    updates: DataFrame,
+    path: str,
+    key: str,
+    partition_col: str | None,
+    existing: DataFrame | None,
 ) -> None:
-    """Fallback merge for partition values whose directory names cannot
-    be resolved exactly: read the WHOLE table, anti-join on key, rewrite
-    preserving the partition layout. Correct for any value type, at the
-    cost of a full rewrite — the partition-scoped fast path handles the
-    common (string/int/date/bool) cases."""
-    try:
-        existing = spark.read.parquet(path)
-    except AnalysisException:
-        existing = None
+    """Write ``existing`` minus the updated keys, plus ``updates``, over
+    ``path`` — with ``partition_col``, as a dynamic overwrite of only
+    the partitions the rows land in."""
     if existing is None:
-        (
-            updates.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
+        # the update IS the (partition) content
+        merged = updates
+    else:
+        keys = updates.select(key).distinct()
+        kept = existing.join(F.broadcast(keys), key, "left_anti")
+        # materialize BEFORE overwriting the files being read —
+        # localCheckpoint(eager) cuts lineage to stored blocks, so the
+        # rewrite can't consume its own output (cache() could still
+        # evict and recompute from the overwritten files)
+        merged = kept.unionByName(updates.select(*kept.columns)).localCheckpoint(
+            eager=True
         )
-        return
-    keys = updates.select(key).distinct()
-    kept = existing.join(F.broadcast(keys), key, "left_anti")
-    merged = kept.unionByName(updates.select(*kept.columns))
-    staged = merged.localCheckpoint(eager=True)
-    staged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    writer = merged.write.mode("overwrite")
+    if partition_col is not None:
+        writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
+            partition_col
+        )
+    writer.parquet(path)
 
 
 def register_table(
@@ -431,30 +415,7 @@ def upsert_with_changelog(
     resolves with a single unified commit, which plain parquet cannot
     express).
     """
-    if partition_col is not None:
-        parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-        try:
-            dirs = _partition_dirs(path, partition_col, parts)
-        except _UnresolvablePartition:
-            dirs = None  # unreproducible dir name → full-table read
-        if dirs is None:
-            try:
-                existing = spark.read.parquet(path)
-            except AnalysisException:
-                existing = None
-        else:
-            # narrow read (same contract as upsert_by_key): only the
-            # touched partition dirs, so disjoint-partition writers
-            # compose
-            existing = (
-                spark.read.option("basePath", path).parquet(*dirs) if dirs else None
-            )
-    else:
-        try:
-            existing = spark.read.parquet(path)
-        except AnalysisException:
-            existing = None
-
+    existing = _existing_slice(spark, updates, path, partition_col)
     cols = updates.columns
     if existing is None:
         changes = updates.withColumn("_change_type", F.lit("insert"))
@@ -474,7 +435,7 @@ def upsert_with_changelog(
         )
         changes = inserts.unionByName(pre).unionByName(post)
     version = _commit_changelog(changes, changelog_path)
-    upsert_by_key(spark, updates, path, key, partition_col=partition_col)
+    _merge(updates, path, key, partition_col, existing)
     return version
 
 

@@ -124,14 +124,14 @@ def write_cdc_fixture(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
     )
 
 
-def parse_cdc(raw: DataFrame, json_col: str = "value") -> DataFrame:
+def parse_cdc(raw: DataFrame) -> DataFrame:
     """Envelope parse + flatten + typed bronze columns — the shared
     transform for any CDC byte source (S1/S2 → P1/P2/P3 → F1/F3).
 
-    ``raw`` carries one JSON string per record in ``json_col``
+    ``raw`` carries one JSON string per record in ``value``
     (for Kafka: ``selectExpr("CAST(value AS STRING) AS value")``).
     """
-    after_json = F.get_json_object(F.col(json_col), "$.after")
+    after_json = F.get_json_object(F.col("value"), "$.after")
     parsed = (
         raw.select(after_json.alias("after_json"))
         .filter(F.col("after_json").isNotNull())  # tombstone filter (P3)
@@ -153,27 +153,21 @@ def run_bronze_stream(
     cdc_dir: str,
     bronze_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> DataFrame:
     """File-source stream → parse → partitioned parquet append with
-    checkpoint; returns the bronze table read back."""
-    raw = (
-        spark.readStream.schema("value string")
-        .text(cdc_dir)
-        .withColumnRenamed("value", "value")
-    )
-    bronze = parse_cdc(raw)
-    writer = (
-        bronze.writeStream.format("parquet")
+    checkpoint, run as one ``availableNow`` pass; returns the bronze
+    table read back."""
+    raw = spark.readStream.schema("value string").text(cdc_dir)
+    q = (
+        parse_cdc(raw)
+        .writeStream.format("parquet")
         .option("path", bronze_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .partitionBy("year", "month", "day")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime="10 seconds").start()
     q.awaitTermination()
     return spark.read.parquet(bronze_dir)
 

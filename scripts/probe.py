@@ -1,37 +1,35 @@
-"""Round-16 optimization probes: isolate + time + explain individual
-heavy entries at sf0.1 with the bench's session conf (noop sink,
-min-of-2, setJobDescription labels). Usage:
+"""Isolate, time and optionally explain individual heavy entries with
+the bench's session conf (noop sink, min-of-3, setJobDescription
+labels). A developer tool, not part of the bench contract. Usage:
 
-    python scripts/probe_r16.py <entry> [<entry> ...] [--cpus N] [--explain]
+    python scripts/probe.py [--cpus N] [--explain OUT_DIR] <entry> [<entry> ...]
 
-Writes explain output to plans/r16/<entry>_probe.txt when --explain.
-Not part of the bench contract; a developer tool for this round.
+The input is the testdata directory named by ``SPARK_GRAFT_SF_DIR``.
+With ``--explain`` the formatted plan of each entry is written to
+OUT_DIR/<entry>_probe.txt.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    explain = "--explain" in sys.argv
-    cpus = "16"
-    for i, a in enumerate(sys.argv):
-        if a == "--cpus":
-            cpus = sys.argv[i + 1]
-            args.remove(cpus) if cpus in args else None
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("entries", nargs="+")
+    ap.add_argument("--cpus", default="16")
+    ap.add_argument("--explain", metavar="OUT_DIR")
+    args = ap.parse_args()
+    cpus = args.cpus
 
     from real_time_fraud_detection_lakehouse_spark.core.session import get_spark
 
     spark = get_spark(
-        "probe-r16",
+        "probe",
         master=f"local[{cpus}]",
         extra_conf={
             "spark.sql.shuffle.partitions": cpus,
@@ -41,6 +39,7 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     from real_time_fraud_detection_lakehouse_spark.core.catalog import (
+        DEFAULT_SF_DIR as SF_DIR,
         TESTDATA_TABLES,
         table,
     )
@@ -55,7 +54,7 @@ def main() -> None:
     frames = {t: table(spark, SF_DIR, t) for t in TESTDATA_TABLES}
     gf = None
 
-    for name in args:
+    for name in args.entries:
         if name in ops:
             builder, _ = ops[name]
             build = lambda: builder(frames)
@@ -74,14 +73,14 @@ def main() -> None:
             build().write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
         print(f"{name}: samples={samples} min={min(samples)}")
-        if explain:
-            os.makedirs("plans/r16", exist_ok=True)
+        if args.explain:
+            os.makedirs(args.explain, exist_ok=True)
             plan = build()._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"
                 )
             )
-            with open(f"plans/r16/{name}_probe.txt", "w") as fh:
+            with open(os.path.join(args.explain, f"{name}_probe.txt"), "w") as fh:
                 fh.write(plan)
     spark.stop()
 

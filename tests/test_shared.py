@@ -1,0 +1,43 @@
+"""core.shared: one surface per (key frame, name), released when the
+key frame is collected; keys that cannot be weak-referenced get an
+unshared, uncached build."""
+
+from __future__ import annotations
+
+import gc
+
+from real_time_fraud_detection_lakehouse_spark.core.shared import shared
+
+
+def test_shared_surface_released_with_key(spark):
+    key = spark.range(10)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return key.selectExpr("id * 2 AS v").persist()
+
+    s = shared(key, "doubled", build)
+    assert shared(key, "doubled", build) is s and len(calls) == 1
+    lazy = shared(key, "lazy", lambda: s.filter("v > 4"))
+    assert not lazy.storageLevel.useMemory
+    assert s.count() == 10 and s.storageLevel.useMemory
+
+    del key
+    gc.collect()
+    assert not s.storageLevel.useMemory and not s.storageLevel.useDisk
+    assert sorted(r.v for r in lazy.collect()) == [6, 8, 10, 12, 14, 16, 18]
+
+
+def test_unreferenceable_key_gets_fresh_uncached_build(spark):
+    key = ("not", "weak-referenceable")
+
+    def build():
+        return spark.range(5).selectExpr("id + 1 AS v").persist()
+
+    a = shared(key, "plus_one", build)
+    b = shared(key, "plus_one", build)
+    assert a is not b
+    for frame in (a, b):
+        assert not frame.storageLevel.useMemory and not frame.storageLevel.useDisk
+        assert sorted(r.v for r in frame.collect()) == [1, 2, 3, 4, 5]

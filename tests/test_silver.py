@@ -70,3 +70,38 @@ def test_cyclic_encoding_round_trip(spark):
         assert abs(r["s"] ** 2 + r["c"] ** 2 - 1.0) < 1e-9
         # reference uses the 3.14159 literal, not math.pi
         assert abs(r["s"] - math.sin(2 * 3.14159 * r["h"] / 24)) < 1e-12
+
+
+def test_bronze_stream_silver_increment_equals_typed_silver(spark, tmp_path):
+    """Bronze keeps the Debezium payload as strings and silver casts:
+    CDC fixture → bronze stream → HWM silver increment yields exactly
+    the rows (and types) of silver over the typed source, minus the
+    tombstoned keys. A typed source gets no cast projection at all."""
+    from real_time_fraud_detection_lakehouse_spark.plans.incremental import (
+        incremental_silver_batch,
+    )
+    from real_time_fraud_detection_lakehouse_spark.plans.silver import _typed_payload
+    from real_time_fraud_detection_lakehouse_spark.sources.transactions import (
+        transactions_df,
+    )
+    from real_time_fraud_detection_lakehouse_spark.streaming.bronze import (
+        TOMBSTONE_MOD,
+        run_bronze_stream,
+        write_cdc_fixture,
+    )
+
+    cdc, bronze = str(tmp_path / "cdc"), str(tmp_path / "bronze")
+    silver = str(tmp_path / "silver")
+    n = write_cdc_fixture(spark, SF_SMALL, cdc)
+    run_bronze_stream(spark, cdc, bronze, str(tmp_path / "ckpt"))
+    assert incremental_silver_batch(spark, bronze, silver) == n
+
+    tx = transactions_df(spark, SF_SMALL)
+    assert _typed_payload(tx) is tx
+    want = build_silver(spark, source=tx).filter(
+        F.pmod(F.xxhash64("trans_num"), F.lit(TOMBSTONE_MOD)) != 0
+    )
+    got = spark.read.parquet(silver).select(*want.columns)
+    assert got.dtypes == want.dtypes
+    rows = sorted(tuple(r) for r in got.collect())
+    assert len(rows) == n and rows == sorted(tuple(r) for r in want.collect())
