@@ -25,12 +25,19 @@ is built on its first demand.
 Release: ``persist()`` registers the plan with the session
 CacheManager, which holds the blocks until an EXPLICIT unpersist (GC
 of the Python DataFrame frees nothing). One ``weakref.finalize`` per
-key therefore unpersists every surface stored under it when the key
+key therefore releases every surface stored under it when the key
 frame is collected, so long-lived sessions that touch many inputs
-(test suites, multi-SF benches) do not accrete cached blocks.
+(test suites, multi-SF benches) do not accrete cached blocks. The
+CacheManager keeps ONE entry per equal plan and ``unpersist`` drops
+it for every frame with that plan, so persisted surfaces are
+reference-counted by plan (``sameSemantics``): two live keys whose
+surfaces have the same plan share one cache entry, and it is
+unpersisted only when the last of them is released.
 
 Fallback: a key that cannot be weak-referenced gets ``build()``
-unshared, and unpersisted, since nothing would ever release it.
+unshared, and unpersisted, since nothing would ever release it —
+unless a live shared surface holds the same plan, whose cache entry
+the unpersist would drop.
 
 Callers decide what to persist (``persist()`` stays in ``build``), so
 a lazy frame derived from a persisted one — the strong-support ring
@@ -48,30 +55,56 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-_SHARED: "weakref.WeakKeyDictionary[object, dict[str, DataFrame]]" = (
+_SHARED: "weakref.WeakKeyDictionary[object, tuple[dict[str, DataFrame], list]]" = (
     weakref.WeakKeyDictionary()
 )
+#: one ``[frame, holders]`` entry per distinct persisted plan that a
+#: live key holds; ``holders`` counts the surfaces holding that plan
+_PLANS: list[list] = []
 
 
 def shared(key: object, name: str, build: Callable[[], DataFrame]) -> DataFrame:
     """The surface ``name`` for ``key``: ``build()`` on first demand,
     the same frame on every later call while ``key`` lives."""
     try:
-        surfaces = _SHARED.get(key)
+        entry = _SHARED.get(key)
     except TypeError:  # not weak-referenceable → no share
-        return build().unpersist()
-    if surfaces is None:
-        surfaces = _SHARED[key] = {}
-        # the callback holds the surfaces, never the key
-        weakref.finalize(key, _release, surfaces)
+        frame = build()
+        if frame.is_cached and _plan_entry(frame) is None:
+            frame.unpersist()
+        return frame
+    if entry is None:
+        entry = _SHARED[key] = ({}, [])
+        # the callback holds the held plan entries, never the key
+        weakref.finalize(key, _release, entry[1])
+    surfaces, held = entry
     if name not in surfaces:
-        surfaces[name] = build()
+        frame = surfaces[name] = build()
+        if frame.is_cached:
+            held.append(_hold(frame))
     return surfaces[name]
 
 
-def _release(surfaces: dict[str, DataFrame]) -> None:
-    try:
-        for frame in surfaces.values():
-            frame.unpersist()
-    except Exception:
-        pass  # session already stopped — nothing left to free
+def _plan_entry(frame: DataFrame) -> list | None:
+    return next((e for e in _PLANS if e[0].sameSemantics(frame)), None)
+
+
+def _hold(frame: DataFrame) -> list:
+    entry = _plan_entry(frame)
+    if entry is None:
+        entry = [frame, 0]
+        _PLANS.append(entry)
+    entry[1] += 1
+    return entry
+
+
+def _release(held: list[list]) -> None:
+    for entry in held:
+        entry[1] -= 1
+        if entry[1]:
+            continue
+        _PLANS[:] = [e for e in _PLANS if e is not entry]
+        try:
+            entry[0].unpersist()
+        except Exception:
+            pass  # session already stopped — nothing left to free

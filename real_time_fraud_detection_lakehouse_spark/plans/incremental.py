@@ -25,6 +25,11 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
+    parquet_source,
+    run_to_parquet,
+)
+
 
 def high_water_mark(target: DataFrame, ts_col: str) -> object | None:
     """A11: max-timestamp scalar used as the incremental cursor."""
@@ -116,24 +121,13 @@ def incremental_silver_stream(
     within the watermark still flow through."""
     from real_time_fraud_detection_lakehouse_spark.plans.silver import build_silver
 
-    schema = spark.read.parquet(bronze_path).schema
-    bronze = (
-        spark.readStream.schema(schema)
-        .parquet(bronze_path)
-        .withWatermark("trans_timestamp", watermark)
+    bronze = parquet_source(spark, bronze_path).withWatermark(
+        "trans_timestamp", watermark
     )
     silver = build_silver(spark, source=bronze)
-    q = (
-        silver.writeStream.format("parquet")
-        .option("path", silver_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .partitionBy("year", "month", "day")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_parquet(
+        silver, silver_path, checkpoint_dir, partition_by=("year", "month", "day")
     )
-    q.awaitTermination()
-    return spark.read.parquet(silver_path)
 
 
 def incremental_agg_refresh(

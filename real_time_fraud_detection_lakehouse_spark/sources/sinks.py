@@ -353,14 +353,13 @@ def alert_sink(
     alerts: DataFrame,
     url: str,
     transport: Callable[[str, bytes], int] | None = None,
-    max_alerts: int = 100,
 ) -> int:
     """S12: post one block-kit-style alert per fraud row
     (realtime_prediction_job.py:115-209 semantics, engine-side).
-    Collects at most ``max_alerts`` rows (alerts are rare by
-    construction — the stream filters to HIGH risk first). Returns the
-    number posted."""
-    rows = alerts.limit(max_alerts).collect()
+    Collects every row (alerts are rare by construction — the stream
+    filters to HIGH risk first), so no alert is silently dropped.
+    Returns the number posted."""
+    rows = alerts.collect()
     for row in rows:
         payload = {
             "text": (

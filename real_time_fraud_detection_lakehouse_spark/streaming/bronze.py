@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from real_time_fraud_detection_lakehouse_spark.core.schemas import CDC_ENVELOPE
 from real_time_fraud_detection_lakehouse_spark.sources.transactions import transactions_df
+from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import run_to_parquet
 
 #: ~1 in 211 records becomes a tombstone (after=null) to exercise P3;
 #: selection is a seeded hash on the key so it is deterministic AND
@@ -158,18 +159,9 @@ def run_bronze_stream(
     checkpoint, run as one ``availableNow`` pass; returns the bronze
     table read back."""
     raw = spark.readStream.schema("value string").text(cdc_dir)
-    q = (
-        parse_cdc(raw)
-        .writeStream.format("parquet")
-        .option("path", bronze_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .partitionBy("year", "month", "day")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_parquet(
+        parse_cdc(raw), bronze_dir, checkpoint_dir, partition_by=("year", "month", "day")
     )
-    q.awaitTermination()
-    return spark.read.parquet(bronze_dir)
 
 
 def streaming_bronze_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -88,6 +88,12 @@ from real_time_fraud_detection_lakehouse_spark.operators.text import (
     DECON_EVAL_SOURCE,
     DECON_GRAM,
 )
+from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
+    parquet_source,
+    run_partitioned_foreach_stream,
+    run_to_parquet,
+    write_batch_partition,
+)
 
 #: synthetic ingest clock epoch for the fixture: doc_id seconds after a
 #: fixed base — deterministic, monotone in doc_id, so "first arrival"
@@ -220,21 +226,13 @@ def curation_stream(
     dedup, whose state is watermark-bounded. Output is an append-mode
     parquet sink: each surviving first-arrival emits exactly once
     (checkpointed — restart-idempotent like the bronze CDC stream)."""
-    source_snapshot = spark.read.parquet(source_path)
-    schema = source_snapshot.schema
     if eval_docs is _AUTO_EVAL:
-        eval_docs = source_snapshot.filter(F.col("source") == DECON_EVAL_SOURCE)
+        eval_docs = spark.read.parquet(source_path).filter(
+            F.col("source") == DECON_EVAL_SOURCE
+        )
     cols = curation_columns()
     toks = _tokens_col()
     th = F.transform(toks, lambda x: F.xxhash64(x))
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # paces ingest to N files per micro-batch (files ordered by
-        # modification time) — lets tests make ARRIVAL order real:
-        # within one availableNow batch the "first row per key" that
-        # dropDuplicatesWithinWatermark keeps is task-scheduling order,
-        # not ingest_ts order; across batches it is state, hence defined
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     proj = [
         "doc_id",
         "source",
@@ -258,8 +256,12 @@ def curation_stream(
                 "_pass_gopher"
             )
         )
+    # max_files_per_trigger makes ARRIVAL order real: within one
+    # availableNow batch the "first row per key" that
+    # dropDuplicatesWithinWatermark keeps is task-scheduling order, not
+    # ingest_ts order; across batches it is state, hence defined
     stream = (
-        reader.parquet(source_path)
+        parquet_source(spark, source_path, max_files_per_trigger)
         .withWatermark("ingest_ts", watermark)
         .select(*proj)
     )
@@ -322,16 +324,7 @@ def curation_stream(
                 .drop("eval_grams", "eval_fps")
             )
     stream = stream.drop("gram_hashes", "_n_toks")
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(stream, out_path, checkpoint_dir)
 
 
 def incremental_dedup_stream(
@@ -403,10 +396,6 @@ def incremental_dedup_stream(
         F.col("bucket").alias("c_bucket"), F.col("grams").alias("c_grams")
     )
 
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # gates 1-2 need only the fp; the gram chain (the most expensive
     # per-row column math) is derived AFTER them, so replays and
     # corpus exact-twins — 30-50% of arrivals at web-crawl dup rates —
@@ -414,7 +403,7 @@ def incremental_dedup_stream(
     # through the fp gates for that purpose only, then drops.
     stage1 = gram_cols()
     stream = (
-        reader.parquet(source_path)
+        parquet_source(spark, source_path, max_files_per_trigger)
         .withWatermark("ingest_ts", watermark)
         .select(
             "doc_id",
@@ -444,16 +433,7 @@ def incremental_dedup_stream(
     stream = stream.join(corpus_grams, near_cond, "left_anti").select(
         "doc_id", "source", "n_chars", "ingest_ts", "fp"
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(stream, out_path, checkpoint_dir)
 
 
 def containment_gate_stream(
@@ -508,13 +488,9 @@ def containment_gate_stream(
         F.col("bucket").alias("c_bucket"), F.col("grams").alias("c_grams")
     )
 
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stage1 = gram_cols()
     stream = (
-        reader.parquet(source_path)
+        parquet_source(spark, source_path, max_files_per_trigger)
         .withWatermark("ingest_ts", watermark)
         .select(
             "doc_id",
@@ -545,16 +521,9 @@ def containment_gate_stream(
     stream = stream.join(corpus_grams, gate, "left_anti").select(
         "doc_id", "source", "n_chars", "ingest_ts", "fp"
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(stream, out_path, checkpoint_dir)
+
+
 def containment_gate_global_stream(
     spark: SparkSession,
     source_path: str,
@@ -586,13 +555,8 @@ def containment_gate_global_stream(
     from real_time_fraud_detection_lakehouse_spark.operators.dedup import (
         containment_gate_global,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch, batch_id: int) -> None:
         write_batch_partition(

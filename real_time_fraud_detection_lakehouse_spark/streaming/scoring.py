@@ -31,6 +31,14 @@ from real_time_fraud_detection_lakehouse_spark.functions.features import (
     with_silver_features,
 )
 from real_time_fraud_detection_lakehouse_spark.sources.sinks import alert_sink, upsert_by_key
+from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
+    parquet_source,
+    read_batch_partitions,
+    run_foreach,
+    run_partitioned_foreach_stream,
+    run_to_parquet,
+    write_batch_partition,
+)
 
 
 def score_batch(batch: DataFrame, model=None) -> DataFrame:
@@ -80,8 +88,7 @@ def run_scoring_stream(
 ) -> DataFrame:
     """Checkpointed AvailableNow scoring stream over a parquet source
     of typed transactions: score → upsert → alert."""
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def process(batch: DataFrame, batch_id: int) -> None:
         scored = score_batch(batch, model=model).cache()
@@ -99,14 +106,7 @@ def run_scoring_stream(
             alert_sink(alerts, webhook_url, transport)
         scored.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach(stream, process, checkpoint_dir)
     return spark.read.parquet(predictions_path)
 
 
@@ -130,19 +130,9 @@ def enrich_stream(
     stream-stream join). The broadcast hint keeps the per-batch join
     shuffle-free; dims here are small by design (SURVEY star schema).
     """
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
     enriched = stream.join(F.broadcast(dim), on, "left")
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(enriched, out_path, checkpoint_dir)
 
 
 #: Above this many distinct parent keys the FK monitor stops hinting
@@ -198,13 +188,7 @@ def fk_orphan_monitor_stream(
     (count/sum distribute over the micro-batch partition of the
     child), pinned in tests/test_streaming.py under a planted-orphan
     fixture."""
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
-
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
     pk = parent.select(F.col(parent_key).alias("__pk")).distinct()
     # one bounded probe at stream start: stop counting at max+1 keys
     small = pk.limit(broadcast_max_keys + 1).count() <= broadcast_max_keys
@@ -280,13 +264,8 @@ def fuzzy_entity_gate_stream(
         fuzzy_entity_gate,
         update_entity_index,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         decisions = fuzzy_entity_gate(spark, batch, index_root, depth=depth)
@@ -333,13 +312,8 @@ def ring_monitor_stream(
         ring_links,
         ring_pairs_from_links,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         write_batch_partition(ring_links(batch), out_path, batch_id)
@@ -376,13 +350,8 @@ def ring_monitor_stream_maintained(
         ring_links,
         ring_pairs_from_links,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         write_batch_partition(ring_links(batch), out_path, batch_id)
@@ -426,29 +395,13 @@ def compact_ring_links(spark: SparkSession, batch_out_path: str, root: str) -> i
     rows — tiny against the fact stream — and compaction rewrites
     only that projection, never fact data; readers flip atomically
     between generations (MVCC manifests)."""
-    import os
-
     from real_time_fraud_detection_lakehouse_spark.sources.snapshots import (
         publish_tables,
-        read_published,
     )
 
-    if os.path.isdir(batch_out_path):
-        fresh = (
-            spark.read.schema(RING_LINKS_SCHEMA + ", batch_id long")
-            .parquet(batch_out_path)
-            .select("cc_num", "merchant", "day")
-        )
-    else:
-        fresh = spark.createDataFrame([], RING_LINKS_SCHEMA)
-    try:
-        # same KeyError fallback as the maintained monitor: a store
-        # whose generations lack ring_links folds fresh-only
-        prev = read_published(spark, root)["ring_links"]
-        merged = prev.unionByName(fresh).distinct()
-    except (FileNotFoundError, KeyError):
-        merged = fresh.distinct()
-    return publish_tables({"ring_links": merged}, root)
+    return publish_tables(
+        {"ring_links": ring_links_maintained(spark, batch_out_path, root)}, root
+    )
 
 
 def ring_links_maintained(
@@ -460,20 +413,13 @@ def ring_links_maintained(
     KeyError (generations without a ring_links table) falls back like
     no-store-yet (r14 advice); a missing batch dir means zero
     unfolded partitions (the scaffold's zero-batch guard)."""
-    import os
-
     from real_time_fraud_detection_lakehouse_spark.sources.snapshots import (
         read_published,
     )
 
-    if os.path.isdir(batch_out_path):
-        fresh = (
-            spark.read.schema(RING_LINKS_SCHEMA + ", batch_id long")
-            .parquet(batch_out_path)
-            .select("cc_num", "merchant", "day")
-        )
-    else:
-        fresh = spark.createDataFrame([], RING_LINKS_SCHEMA)
+    fresh = read_batch_partitions(
+        spark, batch_out_path, RING_LINKS_SCHEMA + ", batch_id long"
+    ).select("cc_num", "merchant", "day")
     try:
         published = read_published(spark, root)["ring_links"]
         return published.unionByName(fresh).distinct()
@@ -524,10 +470,6 @@ def _centrality_emit(
     rows + per-merchant long seed counts, idempotently written under
     ``batch_id=<N>``. ONE definition shared by the standalone
     centrality monitor and the composed ring-hub-trend monitor."""
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        write_batch_partition,
-    )
-
     write_batch_partition(
         batch.select("cc_num", "merchant").distinct(), edges_dir, batch_id
     )
@@ -568,15 +510,9 @@ def centrality_graph_stream_maintained(
     tail compacts away at each fold."""
     import os
 
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
-
     edges_dir = os.path.join(out_path, "edges")
     seed_dir = os.path.join(out_path, "seed")
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         _centrality_emit(batch, batch_id, edges_dir, seed_dir)
@@ -587,27 +523,34 @@ def centrality_graph_stream_maintained(
     )
 
 
-def _centrality_fresh(spark: SparkSession, out_path: str):
-    """(edges, seed-partials) from the monitor's not-yet-folded batch
-    partitions — empty frames when no partitions exist (the scaffold's
-    zero-batch guard, applied to both surfaces)."""
+def _centrality_graph_rows(spark: SparkSession, out_path: str, root: str):
+    """(edges, seed partials) over published ∪ not-yet-folded batch
+    partitions, each distinct on the row: edges on (cc_num, merchant),
+    seed partials on (merchant, batch_id). KeyError (generations
+    without the centrality tables) falls back like no-store-yet; a
+    missing batch dir means zero unfolded partitions."""
     import os
 
-    edges_dir = os.path.join(out_path, "edges")
-    seed_dir = os.path.join(out_path, "seed")
-    if os.path.isdir(edges_dir):
-        edges = (
-            spark.read.schema(CENTRALITY_EDGES_SCHEMA + ", batch_id long")
-            .parquet(edges_dir)
-            .select("cc_num", "merchant")
+    from real_time_fraud_detection_lakehouse_spark.sources.snapshots import (
+        read_published,
+    )
+
+    edges = read_batch_partitions(
+        spark, os.path.join(out_path, "edges"),
+        CENTRALITY_EDGES_SCHEMA + ", batch_id long",
+    ).select("cc_num", "merchant")
+    seed = read_batch_partitions(
+        spark, os.path.join(out_path, "seed"), CENTRALITY_SEED_SCHEMA
+    )
+    try:
+        prev = read_published(spark, root)
+        edges, seed = (
+            prev["centrality_edges"].unionByName(edges),
+            prev["centrality_seed"].unionByName(seed),
         )
-    else:
-        edges = spark.createDataFrame([], CENTRALITY_EDGES_SCHEMA)
-    if os.path.isdir(seed_dir):
-        seed = spark.read.schema(CENTRALITY_SEED_SCHEMA).parquet(seed_dir)
-    else:
-        seed = spark.createDataFrame([], CENTRALITY_SEED_SCHEMA)
-    return edges, seed
+    except (FileNotFoundError, KeyError):
+        pass
+    return edges.distinct(), seed.distinct()
 
 
 def compact_centrality_graph(
@@ -626,16 +569,9 @@ def compact_centrality_graph(
     is ``vacuum_published``'s job. Returns the group version."""
     from real_time_fraud_detection_lakehouse_spark.sources.snapshots import (
         publish_tables,
-        read_published,
     )
 
-    fresh_edges, fresh_seed = _centrality_fresh(spark, out_path)
-    try:
-        prev = read_published(spark, root)
-        edges = prev["centrality_edges"].unionByName(fresh_edges).distinct()
-        seed = prev["centrality_seed"].unionByName(fresh_seed).distinct()
-    except (FileNotFoundError, KeyError):
-        edges, seed = fresh_edges.distinct(), fresh_seed.distinct()
+    edges, seed = _centrality_graph_rows(spark, out_path, root)
     return publish_tables(
         {"centrality_edges": edges, "centrality_seed": seed}, root
     )
@@ -651,26 +587,10 @@ def centrality_graph_maintained(
     Identical to the from-scratch projections on the same data by
     distinct-union idempotence + exact 0/1 sums (pinned across a
     mid-stream fold in tests/test_streaming.py)."""
-    from real_time_fraud_detection_lakehouse_spark.sources.snapshots import (
-        read_published,
-    )
-
-    fresh_edges, fresh_seed = _centrality_fresh(spark, out_path)
-    try:
-        prev = read_published(spark, root)
-        edges = prev["centrality_edges"].unionByName(fresh_edges)
-        seed_rows = prev["centrality_seed"].unionByName(fresh_seed)
-    except (FileNotFoundError, KeyError):
-        edges, seed_rows = fresh_edges, fresh_seed
-    edges = edges.distinct()
-    seed = (
-        seed_rows.distinct()
-        .groupBy("merchant")
-        .agg(
-            (
-                F.sum("n_fraud").cast("double")
-                / F.sum("n_tx").cast("double")
-            ).alias("risk0")
+    edges, seed_rows = _centrality_graph_rows(spark, out_path, root)
+    seed = seed_rows.groupBy("merchant").agg(
+        (F.sum("n_fraud").cast("double") / F.sum("n_tx").cast("double")).alias(
+            "risk0"
         )
     )
     return edges, seed
@@ -735,16 +655,11 @@ def ring_hub_trend_stream_maintained(
         dash_ring_hub_trend,
         ring_links,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
     links_dir = os.path.join(out_path, "links")
     edges_dir = os.path.join(out_path, "edges")
     seed_dir = os.path.join(out_path, "seed")
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         write_batch_partition(ring_links(batch), links_dir, batch_id)
@@ -814,10 +729,6 @@ def card_testing_monitor_stream(
         CARD_TESTING_MAX_AMT,
         CARD_TESTING_MIN,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
     small = F.col("amt") < CARD_TESTING_MAX_AMT
 
@@ -840,8 +751,7 @@ def card_testing_monitor_stream(
         )
         write_batch_partition(partials, out_path, batch_id)
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
     partials = run_partitioned_foreach_stream(
         spark, stream, _emit, out_path, checkpoint_dir,
         "merchant string, day date, cc_num long, n_tx long, n_small long, "
@@ -918,13 +828,8 @@ def card_amount_anomaly_stream(
         _qsk_pow10_col,
         qsk_histogram,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         write_batch_partition(
@@ -1028,13 +933,8 @@ def seasonal_anomaly_stream(
     from real_time_fraud_detection_lakehouse_spark.plans.dashboards import (
         dash_seasonal_anomaly,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         partials = (

@@ -25,6 +25,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
+    parquet_source,
+    run_to_parquet,
+)
+
 OUTPUT_SCHEMA = (
     "cc_num long, trans_num string, trans_timestamp timestamp, amt double, "
     "txn_seq long, cum_amount double, avg_amount_so_far double"
@@ -88,8 +93,7 @@ def velocity_stream(
 ) -> DataFrame:
     """Run the stateful velocity tracker over a parquet-backed stream
     (AvailableNow); state survives restarts via the checkpoint."""
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
     tracked = (
         stream.select("cc_num", "trans_num", "trans_timestamp", "amt")
         .groupBy("cc_num")
@@ -101,18 +105,7 @@ def velocity_stream(
             GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        tracked.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # explicit schema: a zero-row stream leaves the sink holding only
-    # _spark_metadata, which cannot infer a parquet schema
-    return spark.read.schema(OUTPUT_SCHEMA).parquet(out_path)
+    return run_to_parquet(tracked, out_path, checkpoint_dir)
 
 
 # --- streaming heavy hitters (Misra-Gries state, round 11) ------------------
@@ -202,11 +195,9 @@ def heavy_hitters_stream(
 
     capacity = MG_CAPACITY if capacity is None else capacity
     k = TOP_NGRAMS_K if k is None else k
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    bigrams = _bigram_stream(reader.parquet(source_path)).withColumn(
+    bigrams = _bigram_stream(
+        parquet_source(spark, source_path, max_files_per_trigger)
+    ).withColumn(
         "shard", F.pmod(F.xxhash64("bigram"), F.lit(shards)).cast("int")
     )
     tracked = bigrams.groupBy("shard").applyInPandasWithState(
@@ -216,19 +207,7 @@ def heavy_hitters_stream(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    q = (
-        tracked.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # explicit schema: an all-short-docs source emits ZERO rows, and a
-    # sink directory holding only _spark_metadata cannot infer one —
-    # the empty stream must yield an empty top-K, not an AnalysisException
-    emitted = spark.read.schema(HH_OUTPUT_SCHEMA).parquet(out_path)
+    emitted = run_to_parquet(tracked, out_path, checkpoint_dir)
     latest = Window.partitionBy("shard")
     return (
         emitted.withColumn("max_seq", F.max("emit_seq").over(latest))
@@ -312,8 +291,7 @@ def velocity_stream_tws(
             "transformWithStateInPandas needs pyspark >= 4.0 and google.protobuf "
             "(the TWS state-server wire protocol) — absent in this container"
         )
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
     tracked = (
         stream.select("cc_num", "trans_num", "trans_timestamp", "amt")
         .groupBy("cc_num")
@@ -324,17 +302,7 @@ def velocity_stream_tws(
             timeMode="none",
         )
     )
-    q = (
-        tracked.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # explicit schema: same zero-row-sink rationale as velocity_stream
-    return spark.read.schema(OUTPUT_SCHEMA).parquet(out_path)
+    return run_to_parquet(tracked, out_path, checkpoint_dir)
 
 
 # --- streaming impossible-travel (per-card last-location state) --------------
@@ -439,8 +407,7 @@ def impossible_travel_stream(
     cc_num (the same key every per-card op here uses), state size is
     3 scalars x live cards, and the per-row walk is the Arrow-batched
     applyInPandasWithState kernel — no rescan of history, ever."""
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
     tracked = (
         stream.select(
             "cc_num", "trans_num", "trans_timestamp", "merch_lat", "merch_long"
@@ -455,16 +422,7 @@ def impossible_travel_stream(
             GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        tracked.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema(TRAVEL_OUTPUT_SCHEMA).parquet(out_path)
+    return run_to_parquet(tracked, out_path, checkpoint_dir)
 
 
 # --- streaming velocity burst (per-card rolling-hour state) ------------------
@@ -546,8 +504,7 @@ def velocity_burst_stream(
     minimum any rolling counter can hold — pruned against the newest
     timestamp per arrival; one state-store shuffle per micro-batch on
     cc_num like every per-card op here."""
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
     tracked = (
         stream.select("cc_num", "trans_num", "trans_timestamp")
         .groupBy("cc_num")
@@ -559,14 +516,4 @@ def velocity_burst_stream(
             GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        tracked.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # explicit schema: same zero-row-sink rationale as velocity_stream
-    return spark.read.schema(BURST_OUTPUT_SCHEMA).parquet(out_path)
+    return run_to_parquet(tracked, out_path, checkpoint_dir)

@@ -20,6 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
+    parquet_source,
+    run_partitioned_foreach_stream,
+    run_to_parquet,
+    write_batch_partition,
+)
+
 
 def _assert_utc_day_bucketing(spark: SparkSession) -> None:
     """Guard for every stream whose batch twin buckets days with
@@ -51,11 +58,8 @@ def hourly_metrics_stream(
 ) -> DataFrame:
     """Tumbling 1-hour event-time aggregation with watermark; append
     mode emits each window once it is final (watermark passed)."""
-    schema = spark.read.parquet(source_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(source_path)
-        .withWatermark("trans_timestamp", watermark)
+    stream = parquet_source(spark, source_path).withWatermark(
+        "trans_timestamp", watermark
     )
     agg = (
         stream.groupBy(
@@ -75,16 +79,7 @@ def hourly_metrics_stream(
             "frauds",
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(agg, out_path, checkpoint_dir)
 
 
 def user_sessions_stream(
@@ -98,11 +93,8 @@ def user_sessions_stream(
     """Gap-based session aggregation (``session_window``): sessions
     close when no event arrives within ``gap``; watermark bounds the
     open-session state."""
-    schema = spark.read.parquet(source_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(source_path)
-        .withWatermark("trans_timestamp", watermark)
+    stream = parquet_source(spark, source_path).withWatermark(
+        "trans_timestamp", watermark
     )
     agg = (
         stream.groupBy(
@@ -117,16 +109,7 @@ def user_sessions_stream(
             "events_in_session",
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(agg, out_path, checkpoint_dir)
 
 def dedup_stream(
     spark: SparkSession,
@@ -146,23 +129,12 @@ def dedup_stream(
     is the streaming twin of the CDC replay policy: an at-least-once
     upstream (Kafka redelivery, file re-drop) becomes exactly-once
     downstream."""
-    schema = spark.read.parquet(source_path).schema
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(source_path)
+        parquet_source(spark, source_path)
         .withWatermark("trans_timestamp", watermark)
         .dropDuplicatesWithinWatermark([key])
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(stream, out_path, checkpoint_dir)
 
 
 def clicks_before_purchase_stream(
@@ -187,8 +159,7 @@ def clicks_before_purchase_stream(
     defines correctness: clicks later than ``watermark`` behind the
     max event time may be dropped (documented lossy-late semantics,
     same contract as the reference's HWM filter)."""
-    schema = spark.read.parquet(source_path).schema
-    events = lambda: spark.readStream.schema(schema).parquet(source_path)  # noqa: E731
+    events = lambda: parquet_source(spark, source_path)  # noqa: E731
     purchases = (
         events()
         .filter(F.col("event_type") == "purchase")
@@ -211,16 +182,7 @@ def clicks_before_purchase_stream(
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {window}"))
         & (F.col("click_ts") < F.col("purchase_ts")),
     ).select("purchase_id", F.col("p_user").alias("user_id"), "purchase_ts", "click_ts")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(joined, out_path, checkpoint_dir)
 
 
 def clicks_before_purchase_stream_outer(
@@ -246,8 +208,7 @@ def clicks_before_purchase_stream_outer(
     unmatched purchases within the final watermark of max event time
     stay buffered and are not emitted — a live stream flushes them as
     the clock advances."""
-    schema = spark.read.parquet(source_path).schema
-    events = lambda: spark.readStream.schema(schema).parquet(source_path)  # noqa: E731
+    events = lambda: parquet_source(spark, source_path)  # noqa: E731
     purchases = (
         events()
         .filter(F.col("event_type") == "purchase")
@@ -277,16 +238,7 @@ def clicks_before_purchase_stream_outer(
         "click_ts",
         F.col("click_ts").isNull().alias("no_prior_click"),
     )
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return run_to_parquet(joined, out_path, checkpoint_dir)
 
 
 def inspect_dedup_state(
@@ -356,11 +308,9 @@ def distinct_users_sketch_stream(
     from real_time_fraud_detection_lakehouse_spark.plans.relational import HLL_LGK
 
     _assert_utc_day_bucketing(spark)
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path).withWatermark("ts", watermark)
+    stream = parquet_source(spark, source_path, max_files_per_trigger).withWatermark(
+        "ts", watermark
+    )
     daily = (
         stream.groupBy(
             F.window("ts", "1 day").alias("w"),
@@ -377,22 +327,7 @@ def distinct_users_sketch_stream(
             "events",
         )
     )
-    q = (
-        daily.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # explicit schema: a source whose span fits inside the watermark
-    # (or an empty source) emits ZERO finalized days and the sink holds
-    # only _spark_metadata, which cannot infer a parquet schema — the
-    # stateful-sink bug class fixed at the velocity/heavy-hitter sinks
-    sketches = spark.read.schema(
-        "day date, event_type string, sketch binary, events long"
-    ).parquet(out_path)
+    sketches = run_to_parquet(daily, out_path, checkpoint_dir)
     return sketches.groupBy("event_type").agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch", F.lit(False)))
         .alias("rollup_distinct_users"),
@@ -446,28 +381,15 @@ def events_dau_wau_stream(
     from real_time_fraud_detection_lakehouse_spark.sources.transactions import dround
 
     _assert_utc_day_bucketing(spark)
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path).withWatermark("ts", watermark)
+    stream = parquet_source(spark, source_path, max_files_per_trigger).withWatermark(
+        "ts", watermark
+    )
     daily = (
         stream.groupBy(F.window("ts", "1 day").alias("w"))
         .agg(F.hll_sketch_agg("user_id", F.lit(HLL_LGK)).alias("sketch"))
         .select(F.to_date(F.col("w.start")).alias("day"), "sketch")
     )
-    q = (
-        daily.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # explicit schema: a short-span source finalizes zero days and the
-    # sink holds only _spark_metadata (the stateful-sink bug class)
-    sketches = spark.read.schema("day date, sketch binary").parquet(out_path)
+    sketches = run_to_parquet(daily, out_path, checkpoint_dir)
     dau = sketches.select(
         "day", F.hll_sketch_estimate("sketch").cast("long").alias("dau")
     )
@@ -520,13 +442,8 @@ def price_quantile_sketch_stream(
         qsk_finalize,
         qsk_histogram,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         write_batch_partition(qsk_histogram(batch), out_path, batch_id)
@@ -575,13 +492,8 @@ def fraud_rate_cusum_stream(
     from real_time_fraud_detection_lakehouse_spark.plans.dashboards import (
         cusum_from_daily,
     )
-    from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
-        run_partitioned_foreach_stream,
-        write_batch_partition,
-    )
 
-    schema = spark.read.parquet(source_path).schema
-    stream = spark.readStream.schema(schema).parquet(source_path)
+    stream = parquet_source(spark, source_path)
 
     def _emit(batch: DataFrame, batch_id: int) -> None:
         # same row-membership rule as the batch twin: the dashboard

@@ -4,8 +4,11 @@ Lazy builders run no Spark job here; builders that run actions at
 build time, such as the iterative ring CC, still run them. Writes
 <out_dir>/<entry>_<tag>.txt per entry and prints one line per entry
 with the InMemoryTableScan / Exchange / BroadcastExchange node counts,
-so two checkouts can be compared for plan-shape changes. The input is
-the testdata directory named by ``SPARK_GRAFT_SF_DIR``.
+so two checkouts can be compared for plan-shape changes. Nodes under
+an InMemoryRelation are not counted: once the cached surface is
+materialized the explain prints its final adaptive plan, whose shape
+varies run to run. The input is the testdata directory named by
+``SPARK_GRAFT_SF_DIR``.
 
 Usage: python scripts/explain.py <out_dir> <tag> <entry> [<entry> ...]
 """
@@ -18,14 +21,31 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: plan nodes counted per entry — the formatted explain lists every
-#: node once as "(<id>) <NodeName>" in its details section
+#: plan nodes counted per entry
 COUNTED = ("InMemoryTableScan", "Exchange", "BroadcastExchange")
+#: one node of a formatted-explain tree: "<tree prefix><Name ...> (<id>)"
+TREE_NODE = re.compile(r"^[ :|+*-]*?(\w+)[^()]*\((\d+)\)")
 
 
 def node_counts(plan: str) -> dict[str, int]:
-    names = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
-    return {n: names.count(n) for n in COUNTED}
+    """Distinct node ids per counted name in the plan trees (the main
+    plan and each subquery), skipping every InMemoryRelation subtree."""
+    seen: set[tuple[str, str]] = set()
+    in_tree, skip_col = False, None
+    for line in plan.splitlines():
+        if line.startswith(("== Physical Plan ==", "Subquery:")):
+            in_tree, skip_col = True, None
+            continue
+        m = TREE_NODE.match(line) if in_tree and line.strip() else None
+        if m is None:
+            in_tree = in_tree and bool(line.strip())
+            continue
+        col = m.start(1)
+        if skip_col is not None and col > skip_col:
+            continue
+        skip_col = col if m.group(1) == "InMemoryRelation" else None
+        seen.add((m.group(1), m.group(2)))
+    return {n: sum(1 for name, _ in seen if name == n) for n in COUNTED}
 
 
 def main() -> None:

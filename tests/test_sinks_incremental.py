@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -101,12 +103,21 @@ def test_alert_sink_capture(spark):
         return 200
 
     silver = build_silver(spark, SF_SMALL)
-    scored = score_batch(transactions_df(spark, SF_SMALL))
+    # +1000 amount and a merchant ~550 km away score 0.8 (HIGH), so far
+    # more HIGH rows than one webhook batch used to be capped at
+    tx = transactions_df(spark, SF_SMALL)
+    tx = tx.withColumn("amt", F.col("amt") + 1000).withColumn(
+        "merch_lat", F.col("lat") + 5
+    )
+    scored = score_batch(tx)
     alerts = scored.filter(F.col("risk_level") == "HIGH").select(
         "trans_num", "amt", "risk_level"
     )
-    n = alert_sink(alerts, "http://example.invalid/webhook", transport, max_alerts=5)
-    assert n == len(captured) <= 5
+    n = alert_sink(alerts, "http://example.invalid/webhook", transport)
+    expected = sorted(r.trans_num for r in alerts.collect())
+    posted = sorted(json.loads(body)["trans_num"] for _, body in captured)
+    assert n == len(captured) == len(expected) > 100
+    assert posted == expected
     assert silver.count() > 0
 
 
