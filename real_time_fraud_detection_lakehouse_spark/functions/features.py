@@ -212,22 +212,26 @@ def with_silver_features(df: DataFrame) -> DataFrame:
     dist = F.when(dist_raw < 0, dist_raw).otherwise(_r(dist_raw))
     hsin_raw, hcos_raw = cyclic_hour(hour)
     hsin, hcos = _r(hsin_raw), _r(hcos_raw)
-    return (
-        df.withColumn("distance_km", dist)
-        .withColumn("age", age_years(ts, F.col("dob")))
-        .withColumn("hour", hour)
-        .withColumn("day_of_week", dow)
-        .withColumn("is_weekend", is_weekend(dow))
-        .withColumn("hour_sin", hsin)
-        .withColumn("hour_cos", hcos)
-        .withColumn("log_amount", _r(log_amount(F.col("amt"))))
-        .withColumn("is_zero_amount", is_zero_amount(F.col("amt")))
-        .withColumn("is_high_amount", is_high_amount(F.col("amt")))
-        .withColumn("amount_bin", amount_bin(F.col("amt")))
-        .withColumn("gender_encoded", gender_encoded(F.col("gender")))
-        .withColumn("is_distant_transaction", is_distant_transaction(F.col("distance_km")))
-        .withColumn("is_late_night", is_late_night(hour))
-        .withColumn("year", F.year(ts))
-        .withColumn("month", F.month(ts))
-        .withColumn("day", F.dayofmonth(ts))
+    # one projection for the block: ``withColumns`` analyses the plan
+    # once, where a chain of ``withColumn`` re-analyses it per column.
+    # distance_km goes first because is_distant_transaction reads it.
+    return df.withColumn("distance_km", dist).withColumns(
+        {
+            "age": age_years(ts, F.col("dob")),
+            "hour": hour,
+            "day_of_week": dow,
+            "is_weekend": is_weekend(dow),
+            "hour_sin": hsin,
+            "hour_cos": hcos,
+            "log_amount": _r(log_amount(F.col("amt"))),
+            "is_zero_amount": is_zero_amount(F.col("amt")),
+            "is_high_amount": is_high_amount(F.col("amt")),
+            "amount_bin": amount_bin(F.col("amt")),
+            "gender_encoded": gender_encoded(F.col("gender")),
+            "is_distant_transaction": is_distant_transaction(F.col("distance_km")),
+            "is_late_night": is_late_night(hour),
+            "year": F.year(ts),
+            "month": F.month(ts),
+            "day": F.dayofmonth(ts),
+        }
     )

@@ -14,129 +14,35 @@ the Delta equivalent so swapping ``format("parquet")`` for
 - S12 webhook alert sink                        (realtime_prediction_job.py:115-209)
 - S6  JDBC sink                                 (producer.py:137-186)
 
-Scale notes: appends are append-only file commits (no read-side);
-the parquet "merge" rewrites only because vanilla parquet has no
-transaction log — on Delta this is a real MERGE INTO keyed join,
-shuffling only on the merge key with dynamic file pruning.
+Scale notes: appends are append-only file commits (no read-side).
+The partitioned upsert stages its rows in a dot-prefixed directory
+inside the table, probes the touched partitions' key column for
+conflicts, and commits an insert-only batch by renaming the staged
+files into place; only a batch that updates existing keys rewrites
+the partitions it touches, because vanilla parquet has no transaction
+log — on Delta this is a real MERGE INTO keyed join, shuffling only
+on the merge key with dynamic file pruning. A crash partway through
+a rename commit leaves some files published and the rest in the
+stage, which Spark readers do not list; replaying the same rows
+repairs it (``upsert_by_key``).
 """
 
 from __future__ import annotations
 
-import datetime
 import errno
 import json
 import os
 import re
+import shutil
 import urllib.request
 import uuid
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-#: Spark writes NULL (and empty-string) partition values to this
-#: directory (ExternalCatalogUtils.DEFAULT_PARTITION_NAME).
-HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
-#: The exact character set Spark/Hive escape in partition path names
-#: (ExternalCatalogUtils.charToEscape): ASCII control chars plus
-#: " # % ' * / : = ? \ DEL { [ ] ^
-_PATH_ESCAPE_CHARS = frozenset(
-    [chr(c) for c in range(0x01, 0x20)]
-    + list("\"#%'*/:=?\\{[]^")
-    + [chr(0x7F)]
-)
-
-
-def _escape_path_name(s: str) -> str:
-    """Mirror Spark's ``ExternalCatalogUtils.escapePathName``: each
-    special character becomes ``%XX`` (uppercase hex)."""
-    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPE_CHARS else c for c in s)
-
-
-def _unescape_path_name(s: str) -> str:
-    """Inverse of :func:`_escape_path_name` (Spark's
-    ``unescapePathName``): ``%XX`` → chr(0xXX); malformed escapes pass
-    through literally, as Spark's does."""
-    out = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "%" and i + 3 <= len(s):
-            try:
-                out.append(chr(int(s[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-class _UnresolvablePartition(Exception):
-    """A touched partition value cannot be safely mapped to a directory
-    name (unsupported type, or the table listing is ambiguous) — the
-    caller must fall back to a full-table merge rather than risk
-    treating an existing partition as new."""
-
-
-def _partition_value_str(v) -> str | None:
-    """Stringify a partition value the way Spark's writer does when it
-    builds the directory name. ``None`` means the Hive default (null)
-    partition. Types whose Spark rendering we cannot reproduce
-    byte-for-byte (float, timestamp, decimal, binary) raise — callers
-    fall back to the full-table merge for those."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, str):
-        # Spark routes the EMPTY string to the default partition too
-        return v if v != "" else None
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
-        return v.isoformat()
-    raise _UnresolvablePartition(f"partition value type {type(v).__name__}")
-
-
-def _partition_dirs(path: str, partition_col: str, values: list) -> list[str]:
-    """Existing hive-style partition directories for ``values``.
-
-    Spark URL-escapes special characters in directory names
-    (``ExternalCatalogUtils.escapePathName``) and writes NULL/empty
-    values to ``__HIVE_DEFAULT_PARTITION__`` — a naive ``col=str(v)``
-    probe misses those, and a missed existing partition would make the
-    upsert's dynamic overwrite silently DROP its unmatched rows. So the
-    resolution is listing-driven: every on-disk ``col=`` directory is
-    unescaped and matched against the Spark-faithful rendering of each
-    value. Raises :class:`_UnresolvablePartition` when a value's
-    rendering is not reproducible (caller falls back to the full-table
-    merge). Local-FS listing — matches this emulation's
-    single-filesystem scope."""
-    prefix = f"{partition_col}="
-    try:
-        names = os.listdir(path)
-    except OSError:
-        return []
-    on_disk = {}  # unescaped value string (None = default partition) -> dir
-    for name in names:
-        if not name.startswith(prefix):
-            continue
-        full = os.path.join(path, name)
-        if not os.path.isdir(full):
-            continue
-        raw = name[len(prefix) :]
-        key = None if raw == HIVE_DEFAULT_PARTITION else _unescape_path_name(raw)
-        on_disk[key] = full
-    dirs = []
-    for v in values:
-        key = _partition_value_str(v)  # may raise _UnresolvablePartition
-        if key in on_disk:
-            dirs.append(on_disk[key])
-    return dirs
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
 
 def append_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -196,70 +102,139 @@ def upsert_by_key(
     main.py:134-145). On Delta:
     DeltaTable.merge().whenMatchedUpdateAll().whenNotMatchedInsertAll().
 
-    With ``partition_col`` (the scale path): the table is partitioned
-    on that column, the merge reads ONLY the partitions containing
-    update rows (directory pruning from the ``isin`` filter), and
-    dynamic partition overwrite rewrites only those partitions —
-    untouched partition files are not read or rewritten. At 100 TB with
-    daily partitions and updates touching the last day or two, a
-    micro-batch rewrites ~1/N of the table instead of all of it.
+    With ``partition_col`` (the scale path), stage then commit:
 
-    Without it: legacy full-table rewrite (kept for small unpartitioned
-    tables; annotated scale-weak).
+    - Stage: the updates are written once, partitioned, into a
+      dot-prefixed ``.stage-<uuid>`` directory inside the table, which
+      Spark's file index does not list. Its ``col=value`` directory
+      names are Spark's own rendering of the touched partitions, so
+      they name the existing partition directories directly.
+    - Probe: the key column of the existing touched directories only
+      (read with an explicit schema, so no footer inference) is
+      left-semi joined with the broadcast staged keys.
+    - No overlap (an insert-only batch): each staged data file is
+      moved into its partition directory with ``os.rename``, and the
+      stage is removed. No existing row is read beyond its key, and no
+      existing file is rewritten: a batch costs O(batch) writes plus
+      the key probe, not O(day).
+    - Overlap: the touched directories are read in full, the updated
+      keys anti-joined out, the staged rows unioned in, and only those
+      partitions rewritten by dynamic partition overwrite. Untouched
+      partitions are never read or rewritten.
+
+    A timestamp ``partition_col`` merges against the whole table
+    instead, because its directory name depends on the session time
+    zone. Without ``partition_col``: full-table rewrite (kept for small
+    unpartitioned tables; scale-weak).
 
     CONTRACT (partition-scoped path): a key's ``partition_col`` value is
-    immutable — matched keys are anti-joined only within the partitions
-    the updates touch, so an update that MOVED a key to a different
-    partition would leave the stale row alive in the old partition.
-    This holds for the lakehouse tables by construction
+    immutable — keys are probed and anti-joined only within the
+    partitions the updates touch, so an update that MOVED a key to a
+    different partition would leave the stale row alive in the old
+    partition. This holds for the lakehouse tables by construction
     (``score_date`` is derived from the immutable ``trans_timestamp``;
     dim tables key on the partition value itself). For mutable
     partition columns, pass ``partition_col=None`` (full-table merge)
     or use Delta MERGE.
 
     CONCURRENCY (partition-scoped path): writers touching DISJOINT
-    partitions compose — each writer lists, reads, and rewrites ONLY
-    its own partition directories (the read below targets the touched
-    subdirs explicitly, never the table root, so a concurrent writer's
-    dynamic overwrite deleting files in another partition can't break
-    this writer's scan). Disjointness is the caller's contract;
-    same-partition concurrent writers need a real transaction log
-    (Delta). Exercised in tests/test_sinks_incremental.py.
+    partitions compose — each writer stages in its own directory, and
+    probes, reads, renames into and rewrites ONLY its own partition
+    directories (never a scan of the table root, so a concurrent
+    writer's commit in another partition can't break this writer's
+    read). Disjointness is the caller's contract; same-partition
+    concurrent writers need a real transaction log (Delta). Exercised
+    in tests/test_sinks_incremental.py.
 
-    Fault tolerance: the merged slice is materialized via eager
+    Fault tolerance: each rename is atomic, the commit as a whole is
+    not. A crash partway through it leaves some staged files published
+    and the rest, with the stage, invisible to Spark readers (a glob
+    that descends into dot-directories would see them); a replay of the
+    same rows (a streaming batch re-run from its checkpoint) then finds
+    the published keys, takes the overlap path and leaves one row per
+    key. The old stage directory stays behind as invisible debris. On
+    the overlap path the merged slice is materialized via eager
     localCheckpoint before the overwrite so the rewrite can't consume
     its own output, but checkpoint blocks live on executors — an
     executor loss mid-overwrite can lose both lineage and originals.
     Single-process local mode is safe; on a real cluster use the Delta
     MERGE (transaction-logged) instead of this emulation.
     """
-    existing = _existing_slice(spark, updates, path, partition_col)
-    _merge(updates, path, key, partition_col, existing)
+    stage = _stage(spark, updates, path, partition_col)
+    if stage is None:
+        existing = _read_table(spark, path)
+    else:
+        updates, existing = stage.rows, stage.existing
+        if existing is not None and existing.join(
+            F.broadcast(updates.select(key)), key, "left_semi"
+        ).isEmpty():
+            existing = None  # insert-only: no existing row changes
+    _commit(stage, updates, path, key, partition_col, existing)
 
 
-def _existing_slice(
+class _Stage(NamedTuple):
+    root: str  # the dot-prefixed stage directory inside the table
+    parts: list[str]  # its ``col=value`` directory names
+    rows: DataFrame  # the staged updates
+    existing: DataFrame | None  # the table's directories among ``parts``
+
+
+def _stage(
     spark: SparkSession, updates: DataFrame, path: str, partition_col: str | None
-) -> DataFrame | None:
-    """The part of the table at ``path`` an upsert of ``updates`` can
-    touch, or ``None`` when there is nothing to merge against (no
-    table yet, or every touched partition is new).
+) -> _Stage | None:
+    """Write ``updates`` partitioned on ``partition_col`` into a new
+    ``.stage-<uuid>`` directory inside the table at ``path``, or return
+    ``None`` when the upsert must merge against the whole table: no
+    partition column, or a timestamp one (its directory name depends
+    on the session time zone). The decision reads the schema only.
 
-    With ``partition_col``: ONLY the touched partition dirs, read
-    explicitly (``basePath`` keeps the partition column in the
-    schema). At scale this prunes the file LISTING itself, not just
-    the post-listing scan — and it is what makes disjoint-partition
-    writers safe to run concurrently. When a touched value's directory
-    rendering is not reproducible, the whole table is read instead:
-    treating an existing partition as new could drop its rows.
-    Without ``partition_col``: the whole table."""
-    if partition_col is not None:
-        parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-        try:
-            dirs = _partition_dirs(path, partition_col, parts)
-        except _UnresolvablePartition:
-            dirs = None
-        if dirs is not None:
-            return spark.read.option("basePath", path).parquet(*dirs) if dirs else None
+    Both the staged rows and the existing touched directories are read
+    with the updates' schema, so neither read infers it from footers;
+    ``basePath`` keeps the partition column of the directories."""
+    if partition_col is None or isinstance(
+        updates.schema[partition_col].dataType, (TimestampType, TimestampNTZType)
+    ):
+        return None
+    root = os.path.join(path, f".stage-{uuid.uuid4().hex}")
+    updates.write.partitionBy(partition_col).parquet(root)
+    parts = [n for n in os.listdir(root) if n.startswith(f"{partition_col}=")]
+    dirs = [os.path.join(path, n) for n in parts if os.path.isdir(os.path.join(path, n))]
+    rows = spark.read.schema(updates.schema).parquet(root).select(*updates.columns)
+    existing = (
+        spark.read.schema(updates.schema).option("basePath", path).parquet(*dirs)
+        if dirs
+        else None
+    )
+    return _Stage(root, parts, rows, existing)
+
+
+def _commit(
+    stage: _Stage | None,
+    updates: DataFrame,
+    path: str,
+    key: str,
+    partition_col: str | None,
+    existing: DataFrame | None,
+) -> None:
+    """Apply ``updates`` to the table: with a stage and nothing to merge
+    against, move each staged data file into its partition directory
+    (the checksum files go with the stage); otherwise :func:`_merge`.
+    The stage is removed only after the commit succeeded."""
+    if stage is not None and existing is None:
+        for part in stage.parts:
+            src, dst = os.path.join(stage.root, part), os.path.join(path, part)
+            os.makedirs(dst, exist_ok=True)
+            for name in os.listdir(src):
+                if not name.startswith((".", "_")):
+                    os.rename(os.path.join(src, name), os.path.join(dst, name))
+    else:
+        _merge(updates, path, key, partition_col, existing)
+    if stage is not None:
+        shutil.rmtree(stage.root)
+
+
+def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The whole table at ``path``, or ``None`` when there is none yet."""
     try:
         return spark.read.parquet(path)
     except AnalysisException:  # only "no table yet"
@@ -395,8 +370,10 @@ def upsert_with_changelog(
     two full table versions.
 
     Scale notes: change rows are computed with one broadcast-key join
-    against the (partition-pruned, when ``partition_col`` is set)
-    existing slice — the same read the upsert itself does; each commit
+    against the existing slice — with ``partition_col``, only the
+    partitions the updates touch, found through the same stage as
+    :func:`upsert_by_key` (a batch that touches no existing partition
+    is committed by rename); each commit
     is its own ``_commit_version=N`` directory so version range reads
     prune directories, and version discovery is one directory listing
     (not a changelog scan).
@@ -414,7 +391,11 @@ def upsert_with_changelog(
     resolves with a single unified commit, which plain parquet cannot
     express).
     """
-    existing = _existing_slice(spark, updates, path, partition_col)
+    stage = _stage(spark, updates, path, partition_col)
+    if stage is None:
+        existing = _read_table(spark, path)
+    else:
+        updates, existing = stage.rows, stage.existing
     cols = updates.columns
     if existing is None:
         changes = updates.withColumn("_change_type", F.lit("insert"))
@@ -434,7 +415,7 @@ def upsert_with_changelog(
         )
         changes = inserts.unionByName(pre).unionByName(post)
     version = _commit_changelog(changes, changelog_path)
-    _merge(updates, path, key, partition_col, existing)
+    _commit(stage, updates, path, key, partition_col, existing)
     return version
 
 

@@ -241,6 +241,92 @@ def test_scoring_stream_end_to_end(spark, tmp_path):
     assert 0.0 <= scores[0] <= scores[1] <= 1.0
 
 
+def _scoring_rows(spark, src, tmp_path, name):
+    """Score ``src`` through the stream into a fresh table (checkpoint
+    ``name``); the predictions as sorted tuples without the wall-clock
+    ``prediction_time``."""
+    preds = str(tmp_path / f"{name}_preds")
+    out = run_scoring_stream(
+        spark,
+        src,
+        preds,
+        str(tmp_path / f"{name}_ckpt"),
+        webhook_url="http://example.invalid/hook",
+        transport=lambda u, b: 200,
+    )
+    return preds, sorted(tuple(r) for r in out.drop("prediction_time").collect())
+
+
+def test_scoring_stream_restart_after_commit_is_exactly_once(spark, tmp_path, monkeypatch):
+    """foreachBatch fails once after the prediction upsert committed
+    (the alert sink raises); rerunning the stream on the same
+    checkpoint replays the batch, and every event ends with exactly
+    one prediction, equal to an uninterrupted run's."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from real_time_fraud_detection_lakehouse_spark.streaming import scoring
+
+    src = str(tmp_path / "tx")
+    tx = transactions_df(spark, SF_SMALL)
+    tx.write.parquet(src)
+    _, expected = _scoring_rows(spark, src, tmp_path, "ref")
+
+    real_alert = scoring.alert_sink
+    calls = []
+
+    def alert_once_failing(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected: crash after the prediction upsert")
+        return real_alert(*args, **kwargs)
+
+    monkeypatch.setattr(scoring, "alert_sink", alert_once_failing)
+    with pytest.raises(StreamingQueryException):
+        _scoring_rows(spark, src, tmp_path, "crash")
+    preds, got = _scoring_rows(spark, src, tmp_path, "crash")
+    assert len(calls) == 2
+    assert got == expected
+    assert len({r[0] for r in got}) == len(got) == tx.count()
+
+
+def test_scoring_stream_replay_after_partial_rename_commit(spark, tmp_path, monkeypatch):
+    """The rename commit of the predictions fails partway (second
+    rename): some files are published, the rest stay in the stage. The
+    replay leaves one row per key, equal to an uninterrupted run, and
+    a read of the table does not see the leftover stage directory."""
+    import glob
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from real_time_fraud_detection_lakehouse_spark.sources import sinks
+
+    src = str(tmp_path / "tx")
+    tx = transactions_df(spark, SF_SMALL)
+    tx.write.parquet(src)
+    _, expected = _scoring_rows(spark, src, tmp_path, "ref")
+
+    real_rename = os.rename
+    calls = []
+
+    def rename_failing_second(src_path, dst_path):
+        calls.append(src_path)
+        if len(calls) == 2:
+            raise OSError("injected: rename failed mid-commit")
+        real_rename(src_path, dst_path)
+
+    monkeypatch.setattr(sinks.os, "rename", rename_failing_second)
+    with pytest.raises(StreamingQueryException):
+        _scoring_rows(spark, src, tmp_path, "crash")
+    monkeypatch.undo()
+    preds, got = _scoring_rows(spark, src, tmp_path, "crash")
+    assert glob.glob(os.path.join(preds, ".stage-*")), "the failed commit's stage stays"
+    assert got == expected
+    assert spark.read.parquet(preds).count() == len({r[0] for r in got}) == tx.count()
+
+
 def test_upsert_changelog_cdf_semantics(spark, tmp_path):
     """Change Data Feed analog: inserts at v1; pre+post images at v2
     for matched keys; replaying the feed onto the v1 snapshot
@@ -459,23 +545,75 @@ def test_upsert_concurrent_disjoint_partitions(spark, tmp_path):
     assert state == {"k1": (13, "p1"), "k2": (23, "p2")}
 
 
-def test_escape_path_name_roundtrip():
-    """_escape_path_name mirrors Spark's ExternalCatalogUtils charset
-    and _unescape_path_name inverts it."""
-    from real_time_fraud_detection_lakehouse_spark.sources.sinks import (
-        _escape_path_name,
-        _unescape_path_name,
-    )
+def test_upsert_insert_only_appends_without_rewriting(spark, tmp_path):
+    """An insert-only upsert into an existing partition commits by
+    renaming its staged files in: every old file stays, same name and
+    size, and no stage directory is left behind. An overlapping key
+    still replaces the old row."""
+    import glob
+    import os
 
-    cases = ["a/b", "x:y", "100%", "q?=r", "back\\slash", 'quo"te', "plain", "a b"]
-    for s in cases:
-        assert _unescape_path_name(_escape_path_name(s)) == s
-    # the exact Spark renderings for the chars the advice named
-    assert _escape_path_name("a/b") == "a%2Fb"
-    assert _escape_path_name("x:y") == "x%3Ay"
-    assert _escape_path_name("100%") == "100%25"
-    # space is NOT in Spark's escape set
-    assert _escape_path_name("a b") == "a b"
+    path = str(tmp_path / "t")
+    upsert_by_key(
+        spark,
+        spark.createDataFrame([("a", 1, "d1"), ("b", 2, "d1")], "k string, v int, d string"),
+        path,
+        "k",
+        partition_col="d",
+    )
+    before = {f: os.path.getsize(f) for f in glob.glob(os.path.join(path, "d=d1", "*.parquet"))}
+    assert before
+    insert = spark.createDataFrame([("c", 3, "d1"), ("e", 5, "d2")], "k string, v int, d string")
+    upsert_by_key(spark, insert, path, "k", partition_col="d")
+    after = {f: os.path.getsize(f) for f in glob.glob(os.path.join(path, "d=d1", "*.parquet"))}
+    assert {f: after[f] for f in before} == before
+    assert len(after) == len(before) + 1
+    assert not glob.glob(os.path.join(path, ".stage-*"))
+    update = spark.createDataFrame([("b", 20, "d1")], "k string, v int, d string")
+    upsert_by_key(spark, update, path, "k", partition_col="d")
+    got = {r["k"]: (r["v"], r["d"]) for r in spark.read.parquet(path).collect()}
+    assert got == {"a": (1, "d1"), "b": (20, "d1"), "c": (3, "d1"), "e": (5, "d2")}
+    assert not glob.glob(os.path.join(path, ".stage-*"))
+
+
+def test_upsert_insert_only_job_count(spark, tmp_path):
+    """An insert-only upsert into an existing partition runs at most 3
+    Spark jobs: the stage write, the staged-key broadcast and the
+    probe. The day-rewriting merge ran 7 on this input."""
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame([("a", 1, "d1")], "k string, v int, d string")
+    upsert_by_key(spark, base, path, "k", partition_col="d")
+    insert = spark.createDataFrame([("b", 2, "d1")], "k string, v int, d string")
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert-insert-only", "insert-only upsert")
+    try:
+        upsert_by_key(spark, insert, path, "k", partition_col="d")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("upsert-insert-only")
+    assert 0 < len(jobs) <= 3, jobs
+    assert spark.read.parquet(path).count() == 2
+
+
+def test_upsert_timestamp_partition_merges_whole_table(spark, tmp_path):
+    """A timestamp partition column takes the full-table merge (its
+    directory name depends on the session time zone): updates and
+    inserts both land, and no stage is written."""
+    import datetime
+    import glob
+    import os
+
+    path = str(tmp_path / "ts")
+    d1, d2 = datetime.datetime(2024, 1, 1, 10), datetime.datetime(2024, 1, 2, 10)
+    schema = "k string, v int, p timestamp"
+    v1 = spark.createDataFrame([("a", 1, d1), ("b", 2, d1)], schema)
+    upsert_by_key(spark, v1, path, "k", partition_col="p")
+    v2 = spark.createDataFrame([("a", 10, d1), ("c", 3, d2)], schema)
+    upsert_by_key(spark, v2, path, "k", partition_col="p")
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {"a": 10, "b": 2, "c": 3}
+    assert not glob.glob(os.path.join(path, ".stage-*"))
 
 
 def test_upsert_escaped_and_null_partitions(spark, tmp_path):
@@ -506,9 +644,9 @@ def test_upsert_escaped_and_null_partitions(spark, tmp_path):
 
 
 def test_upsert_unresolvable_partition_falls_back_to_full_merge(spark, tmp_path):
-    """A partition value type whose Spark directory rendering we can't
-    reproduce byte-for-byte (float) routes through the full-table
-    merge instead of risking data loss."""
+    """A float partition value, whose directory name the sink never
+    renders itself, still finds its existing partition through the
+    stage's own directory names: the partition's other rows survive."""
     path = str(tmp_path / "floatpart")
     v1 = spark.createDataFrame(
         [("a", 1, 0.5), ("b", 2, 0.5), ("c", 3, 1.5)], "k string, v int, p double"
