@@ -25,6 +25,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_fraud_detection_lakehouse_spark.sources.sinks import read_changes, stage_write, swap_in
 from real_time_fraud_detection_lakehouse_spark.streaming.batchsink import (
     parquet_source,
     run_to_parquet,
@@ -146,18 +147,17 @@ def incremental_agg_refresh(
     (and the gap between a 5-minute dashboard cadence that rescans
     100 TB versus one that reads a micro-batch of changes).
 
-    The merged aggregate is written back to ``mat_path`` (overwrite:
-    an aggregate over group_cols is small by construction — its
-    cardinality is the group space, not the fact row count). Returns
-    the refreshed aggregate DataFrame.
+    The merged aggregate is staged beside the files it reads and
+    swapped in over all of ``mat_path`` (``sources.sinks.swap_in``), so
+    no old file goes before the new ones are in place; it is small by
+    construction (its cardinality is the group space, not the fact row
+    count). Returns the refreshed aggregate DataFrame.
 
     Correctness contract: additive measures only (sum/count); for
     min/max or distinct-count measures a changelog refresh needs
     per-group recompute of affected groups instead (join the touched
     keys back to the fact table) — same machinery, different delta.
     """
-    from real_time_fraud_detection_lakehouse_spark.sources.sinks import read_changes
-
     sign = F.when(
         F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
@@ -185,8 +185,7 @@ def incremental_agg_refresh(
         )
         .filter(F.col("cnt") > 0)  # groups whose rows all departed vanish
     )
-    staged = merged.localCheckpoint(eager=True)  # reads mat_path, then overwrites it
-    staged.write.mode("overwrite").parquet(mat_path)
+    swap_in(stage_write(merged, mat_path, []), mat_path, [""])
     return spark.read.parquet(mat_path)
 
 
@@ -212,15 +211,15 @@ def backfill_silver_range(
 ) -> int:
     """Partition-scoped backfill: re-derive silver for
     [start_date, end_date] (inclusive, by trans_timestamp date) from
-    bronze and dynamic-partition-overwrite ONLY the affected
-    year/month/day partitions — the reprocessing tool for 'we fixed a
-    feature bug, re-run last week' that neither touches partitions
-    outside the range nor duplicates rows inside it (overwrite, not
-    append — rerunning is idempotent).
+    bronze, stage it and swap it in over ONLY the year/month/day
+    partitions it lands in (``sources.sinks.swap_in``) — the
+    reprocessing tool for 'we fixed a feature bug, re-run last week'
+    that neither touches partitions outside the range nor duplicates
+    rows inside it (replace, not append — rerunning is idempotent).
 
     Scale design: the bronze scan prunes on the date predicate, the
-    rewrite prunes on dynamic partition overwrite; cost is
-    O(range), never O(table). This is the HWM pipeline's complement:
+    swap touches only the staged partitions; cost is O(range), never
+    O(table). This is the HWM pipeline's complement:
     HWM moves forward, backfill repairs backward. Returns rows
     written.
     """
@@ -234,13 +233,10 @@ def backfill_silver_range(
     n = sliced.count()
     if n == 0:
         return 0
-    silver = build_silver(spark, source=sliced)
-    (
-        silver.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year", "month", "day")
-        .parquet(silver_path)
+    stage = stage_write(
+        build_silver(spark, source=sliced), silver_path, ["year", "month", "day"]
     )
+    swap_in(stage, silver_path, stage.parts)
     return n
 
 

@@ -21,11 +21,12 @@ Two tools:
   partition's rows into ~one right-sized task (coalescing tiny
   partitions, splitting skewed ones) and the write emits ~1 file per
   partition instead of tasks × partitions.
-- ``compact_partitions`` — cure: rewrite only the partitions whose
-  file count exceeds a threshold, through the same partition-pruned
-  scan + dynamic-partition-overwrite machinery as the partitioned
-  upsert (sinks.upsert_by_key); untouched partitions are never read
-  or rewritten.
+- ``compact_partitions`` — cure: read only the partitions whose file
+  count exceeds a threshold, by path and with the table's schema, and
+  rewrite them through the stage-and-swap commit every in-place
+  rewrite uses (``sinks.stage_write`` / ``sinks.swap_in``); untouched
+  partitions are never read or rewritten, and any partition value
+  Spark can write (escaped, NULL) is compacted in place.
 """
 
 from __future__ import annotations
@@ -35,6 +36,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from real_time_fraud_detection_lakehouse_spark.sources.sinks import stage_write, swap_in
 
 
 def write_partitioned_compact(
@@ -79,29 +82,14 @@ def compact_partitions(
     crowded = {p: n for p, n in before.items() if n > max_files_per_partition}
     if not crowded:
         return {}
-
-    # partition values from the dir names: "year=2024/month=1" → filter
-    def part_filter(rel: str):
-        cond = F.lit(True)
-        for piece in rel.split(os.sep):
-            col, val = piece.split("=", 1)
-            cond = cond & (F.col(col).cast("string") == val)
-        return cond
-
-    existing = spark.read.parquet(path)
-    affected = None
-    for rel in crowded:
-        affected = part_filter(rel) if affected is None else (affected | part_filter(rel))
-    slice_df = existing.filter(affected)
-    # materialize before overwriting the files being read (same
-    # self-consumption hazard and same answer as sinks.upsert_by_key)
-    staged = slice_df.hint("rebalance", *partition_cols).localCheckpoint(eager=True)
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
+    schema = spark.read.parquet(path).schema
+    slice_df = (
+        spark.read.schema(schema)
+        .option("basePath", path)
+        .parquet(*(os.path.join(path, rel) for rel in crowded))
     )
+    stage = stage_write(slice_df.hint("rebalance", *partition_cols), path, partition_cols)
+    swap_in(stage, path, crowded)
     return crowded
 
 

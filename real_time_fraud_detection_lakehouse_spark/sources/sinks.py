@@ -15,16 +15,21 @@ the Delta equivalent so swapping ``format("parquet")`` for
 - S6  JDBC sink                                 (producer.py:137-186)
 
 Scale notes: appends are append-only file commits (no read-side).
-The partitioned upsert stages its rows in a dot-prefixed directory
-inside the table, probes the touched partitions' key column for
-conflicts, and commits an insert-only batch by renaming the staged
-files into place; only a batch that updates existing keys rewrites
-the partitions it touches, because vanilla parquet has no transaction
-log — on Delta this is a real MERGE INTO keyed join, shuffling only
-on the merge key with dynamic file pruning. A crash partway through
-a rename commit leaves some files published and the rest in the
-stage, which Spark readers do not list; replaying the same rows
-repairs it (``upsert_by_key``).
+Every in-place rewrite of an existing table — the upsert here,
+``maintenance.compact_partitions``, ``plans.incremental``'s aggregate
+refresh and backfill — goes through one stage-and-swap commit:
+:func:`stage_write` writes the new rows into a dot-prefixed stage
+inside the table, which Spark readers do not list, and
+:func:`swap_in` moves the replaced files into the stage, the staged
+files into place, and then removes the stage, so no file is deleted
+before its replacement is published. The upsert probes the touched
+partitions' key column for conflicts: an insert-only batch only adds
+files; a batch that updates existing keys rewrites the partitions it
+touches, because vanilla parquet has no transaction log — on Delta
+this is a real MERGE INTO keyed join, shuffling only on the merge key
+with dynamic file pruning. A crash partway through a swap leaves rows
+in the stage rather than losing them; replaying the same rows repairs
+an insert-only commit (``upsert_by_key``, ``swap_in``).
 """
 
 from __future__ import annotations
@@ -36,7 +41,7 @@ import re
 import shutil
 import urllib.request
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from typing import NamedTuple
 
 from pyspark.errors import AnalysisException
@@ -102,30 +107,24 @@ def upsert_by_key(
     main.py:134-145). On Delta:
     DeltaTable.merge().whenMatchedUpdateAll().whenNotMatchedInsertAll().
 
-    With ``partition_col`` (the scale path), stage then commit:
+    Stage, probe, swap (:func:`stage_write`, :func:`swap_in`):
 
-    - Stage: the updates are written once, partitioned, into a
-      dot-prefixed ``.stage-<uuid>`` directory inside the table, which
-      Spark's file index does not list. Its ``col=value`` directory
-      names are Spark's own rendering of the touched partitions, so
-      they name the existing partition directories directly.
-    - Probe: the key column of the existing touched directories only
-      (read with an explicit schema, so no footer inference) is
-      left-semi joined with the broadcast staged keys.
-    - No overlap (an insert-only batch): each staged data file is
-      moved into its partition directory with ``os.rename``, and the
-      stage is removed. No existing row is read beyond its key, and no
-      existing file is rewritten: a batch costs O(batch) writes plus
-      the key probe, not O(day).
-    - Overlap: the touched directories are read in full, the updated
-      keys anti-joined out, the staged rows unioned in, and only those
-      partitions rewritten by dynamic partition overwrite. Untouched
-      partitions are never read or rewritten.
+    - Stage: the updates are written once, partitioned on
+      ``partition_col``, into a stage inside the table. Its
+      ``col=value`` directory names are Spark's own rendering of the
+      touched partitions, so they name the table's directories.
+    - Probe: only the table's touched directories (explicit schema, no
+      footer inference) are left-semi joined with the broadcast keys.
+    - No overlap (an insert-only batch): the staged files are moved
+      into place. No existing row is read beyond its key, and no
+      existing file is rewritten: O(batch) writes plus the probe.
+    - Overlap: the directories read, minus the updated keys, plus the
+      staged rows, are staged again and swapped in over them.
+      Untouched partitions are never read or rewritten.
 
-    A timestamp ``partition_col`` merges against the whole table
-    instead, because its directory name depends on the session time
-    zone. Without ``partition_col``: full-table rewrite (kept for small
-    unpartitioned tables; scale-weak).
+    Without ``partition_col``, or with a timestamp one (its directory
+    name depends on the session time zone), the same steps read and
+    replace every partition directory, not just the staged ones.
 
     CONTRACT (partition-scoped path): a key's ``partition_col`` value is
     immutable — keys are probed and anti-joined only within the
@@ -134,142 +133,156 @@ def upsert_by_key(
     partition. This holds for the lakehouse tables by construction
     (``score_date`` is derived from the immutable ``trans_timestamp``;
     dim tables key on the partition value itself). For mutable
-    partition columns, pass ``partition_col=None`` (full-table merge)
-    or use Delta MERGE.
+    partition columns use Delta MERGE.
 
     CONCURRENCY (partition-scoped path): writers touching DISJOINT
     partitions compose — each writer stages in its own directory, and
-    probes, reads, renames into and rewrites ONLY its own partition
-    directories (never a scan of the table root, so a concurrent
-    writer's commit in another partition can't break this writer's
-    read). Disjointness is the caller's contract; same-partition
-    concurrent writers need a real transaction log (Delta). Exercised
-    in tests/test_sinks_incremental.py.
+    probes, reads, and swaps files into and out of ONLY its own
+    partition directories (never a scan of the table root, so a
+    concurrent writer's commit in another partition can't break this
+    writer's read). Disjointness is the caller's contract;
+    same-partition concurrent writers need a real transaction log
+    (Delta). Exercised in tests/test_sinks_incremental.py.
 
-    Fault tolerance: each rename is atomic, the commit as a whole is
-    not. A crash partway through it leaves some staged files published
-    and the rest, with the stage, invisible to Spark readers (a glob
-    that descends into dot-directories would see them); a replay of the
-    same rows (a streaming batch re-run from its checkpoint) then finds
-    the published keys, takes the overlap path and leaves one row per
-    key. The old stage directory stays behind as invisible debris. On
-    the overlap path the merged slice is materialized via eager
-    localCheckpoint before the overwrite so the rewrite can't consume
-    its own output, but checkpoint blocks live on executors — an
-    executor loss mid-overwrite can lose both lineage and originals.
-    Single-process local mode is safe; on a real cluster use the Delta
-    MERGE (transaction-logged) instead of this emulation.
+    Fault tolerance: no row leaves the disk before its replacement is
+    published; the crash windows are those of :func:`swap_in`. After a
+    crash partway through an insert-only swap, a replay of the same
+    rows (a streaming batch re-run from its checkpoint) finds the
+    published keys, takes the overlap path and leaves one row per key;
+    the old stage stays behind as debris Spark readers do not list.
     """
-    stage = _stage(spark, updates, path, partition_col)
-    if stage is None:
-        existing = _read_table(spark, path)
-    else:
-        updates, existing = stage.rows, stage.existing
-        if existing is not None and existing.join(
-            F.broadcast(updates.select(key)), key, "left_semi"
-        ).isEmpty():
-            existing = None  # insert-only: no existing row changes
-    _commit(stage, updates, path, key, partition_col, existing)
+    up = _stage_upsert(spark, updates, path, partition_col)
+    if up.existing is not None and up.existing.join(
+        F.broadcast(up.rows.select(key)), key, "left_semi"
+    ).isEmpty():
+        up = up._replace(existing=None)  # insert-only: no existing row changes
+    _commit(up, path, key)
 
 
-class _Stage(NamedTuple):
-    root: str  # the dot-prefixed stage directory inside the table
-    parts: list[str]  # its ``col=value`` directory names
-    rows: DataFrame  # the staged updates
-    existing: DataFrame | None  # the table's directories among ``parts``
+#: Name prefix of every stage directory: dot-prefixed, so Spark's file
+#: index never lists it.
+STAGE_PREFIX = ".stage-"
 
 
-def _stage(
+class Stage(NamedTuple):
+    root: str  # the stage directory inside the table
+    parts: list[str]  # its partition directories, relative ("" if unpartitioned)
+
+
+def stage_write(df: DataFrame, path: str, partition_cols: list[str]) -> Stage:
+    """Write ``df``, partitioned on ``partition_cols``, into a new stage
+    directory inside the table at ``path``; return it with its
+    partition directories, which are Spark's own rendering of the
+    values (escaped, ``__HIVE_DEFAULT_PARTITION__`` for NULL) and so
+    name the table's directories for the same values."""
+    root = os.path.join(path, f"{STAGE_PREFIX}{uuid.uuid4().hex}")
+    df.write.partitionBy(*partition_cols).parquet(root)
+    return Stage(root, _partition_dirs(root, partition_cols))
+
+
+def swap_in(stage: Stage, path: str, replace: Iterable[str]) -> None:
+    """Publish ``stage`` into the table at ``path`` in place of the data
+    files of the table directories ``replace`` (relative, like
+    ``stage.parts``): first each replaced file is moved into the stage,
+    then each staged file into its table directory, then the stage is
+    removed. No file is deleted before the new files are in place.
+    Every move is one atomic ``os.rename``; the swap as a whole is not.
+
+    Crash windows. Between retiring the old files and publishing the
+    new ones, the replaced directories are short for readers: their old
+    files sit in the stage's hidden ``.retired`` directory and the new
+    ones in the stage, so no row is lost from disk (Spark's dynamic
+    partition overwrite, which this replaces, deleted them outright).
+    A crash during publishing leaves some new files in place and the
+    rest in the stage. Nothing repairs either state automatically and
+    only a finished swap removes its stage: retired files can be moved
+    back by hand, and a replay of the same rows repairs a crash while
+    publishing an insert-only upsert (:func:`upsert_by_key`).
+    """
+    retired = os.path.join(stage.root, ".retired")
+    for part in replace:
+        _move_data_files(os.path.join(path, part), os.path.join(retired, part))
+    for part in stage.parts:
+        _move_data_files(os.path.join(stage.root, part), os.path.join(path, part))
+    shutil.rmtree(stage.root)
+
+
+def _data_files(directory: str) -> list[str]:
+    """Names in ``directory`` (none if it is missing) but Spark's hidden
+    ``.``/``_`` ones: checksums, markers and stages."""
+    try:
+        return [n for n in os.listdir(directory) if not n.startswith((".", "_"))]
+    except FileNotFoundError:
+        return []
+
+
+def _move_data_files(src: str, dst: str) -> None:
+    names = _data_files(src)
+    if names:
+        os.makedirs(dst, exist_ok=True)
+    for name in names:
+        os.rename(os.path.join(src, name), os.path.join(dst, name))
+
+
+def _partition_dirs(root: str, partition_cols: list[str]) -> list[str]:
+    """The ``col=value`` directories under ``root``, one level per
+    partition column, relative to it ("" for no partition column)."""
+    dirs = [""]
+    for col in partition_cols:
+        dirs = [
+            os.path.join(d, n)
+            for d in dirs
+            for n in os.listdir(os.path.join(root, d))
+            if n.startswith(f"{col}=")
+        ]
+    return dirs
+
+
+class _Upsert(NamedTuple):
+    stage: Stage  # the staged updates
+    rows: DataFrame  # the staged updates, read back
+    existing: DataFrame | None  # the table directories ``read``
+    read: list[str]  # the table directories that hold data among those probed
+    cols: list[str]  # the partition columns
+
+
+def _stage_upsert(
     spark: SparkSession, updates: DataFrame, path: str, partition_col: str | None
-) -> _Stage | None:
-    """Write ``updates`` partitioned on ``partition_col`` into a new
-    ``.stage-<uuid>`` directory inside the table at ``path``, or return
-    ``None`` when the upsert must merge against the whole table: no
-    partition column, or a timestamp one (its directory name depends
-    on the session time zone). The decision reads the schema only.
-
-    Both the staged rows and the existing touched directories are read
-    with the updates' schema, so neither read infers it from footers;
-    ``basePath`` keeps the partition column of the directories."""
-    if partition_col is None or isinstance(
+) -> _Upsert:
+    """Stage ``updates`` in the table at ``path``; read it back and the
+    table directories the upsert merges against (see :func:`upsert_by_key`),
+    both with the updates' schema, so neither read infers it from footers."""
+    cols = [partition_col] if partition_col is not None else []
+    stage = stage_write(updates, path, cols)
+    rows = spark.read.schema(updates.schema).parquet(stage.root).select(*updates.columns)
+    whole_table = not cols or isinstance(
         updates.schema[partition_col].dataType, (TimestampType, TimestampNTZType)
-    ):
-        return None
-    root = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-    updates.write.partitionBy(partition_col).parquet(root)
-    parts = [n for n in os.listdir(root) if n.startswith(f"{partition_col}=")]
-    dirs = [os.path.join(path, n) for n in parts if os.path.isdir(os.path.join(path, n))]
-    rows = spark.read.schema(updates.schema).parquet(root).select(*updates.columns)
+    )
+    probed = _partition_dirs(path, cols) if whole_table else stage.parts
+    read = [p for p in probed if _data_files(os.path.join(path, p))]
     existing = (
-        spark.read.schema(updates.schema).option("basePath", path).parquet(*dirs)
-        if dirs
+        spark.read.schema(updates.schema)
+        .option("basePath", path)
+        .parquet(*(os.path.join(path, p) for p in read))
+        if read
         else None
     )
-    return _Stage(root, parts, rows, existing)
+    return _Upsert(stage, rows, existing, read, cols)
 
 
-def _commit(
-    stage: _Stage | None,
-    updates: DataFrame,
-    path: str,
-    key: str,
-    partition_col: str | None,
-    existing: DataFrame | None,
-) -> None:
-    """Apply ``updates`` to the table: with a stage and nothing to merge
-    against, move each staged data file into its partition directory
-    (the checksum files go with the stage); otherwise :func:`_merge`.
-    The stage is removed only after the commit succeeded."""
-    if stage is not None and existing is None:
-        for part in stage.parts:
-            src, dst = os.path.join(stage.root, part), os.path.join(path, part)
-            os.makedirs(dst, exist_ok=True)
-            for name in os.listdir(src):
-                if not name.startswith((".", "_")):
-                    os.rename(os.path.join(src, name), os.path.join(dst, name))
+def _commit(up: _Upsert, path: str, key: str) -> None:
+    """With nothing to merge against, swap the staged updates in as
+    they are, replacing nothing. Otherwise stage ``existing`` minus the
+    updated keys plus the staged rows, swap that in over the
+    directories read, and only then remove the updates' stage."""
+    if up.existing is None:
+        swap_in(up.stage, path, [])
     else:
-        _merge(updates, path, key, partition_col, existing)
-    if stage is not None:
-        shutil.rmtree(stage.root)
-
-
-def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
-    """The whole table at ``path``, or ``None`` when there is none yet."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:  # only "no table yet"
-        return None
-
-
-def _merge(
-    updates: DataFrame,
-    path: str,
-    key: str,
-    partition_col: str | None,
-    existing: DataFrame | None,
-) -> None:
-    """Write ``existing`` minus the updated keys, plus ``updates``, over
-    ``path`` — with ``partition_col``, as a dynamic overwrite of only
-    the partitions the rows land in."""
-    if existing is None:
-        # the update IS the (partition) content
-        merged = updates
-    else:
-        keys = updates.select(key).distinct()
-        kept = existing.join(F.broadcast(keys), key, "left_anti")
-        # materialize BEFORE overwriting the files being read —
-        # localCheckpoint(eager) cuts lineage to stored blocks, so the
-        # rewrite can't consume its own output (cache() could still
-        # evict and recompute from the overwritten files)
-        merged = kept.unionByName(updates.select(*kept.columns)).localCheckpoint(
-            eager=True
-        )
-    writer = merged.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
-            partition_col
-        )
-    writer.parquet(path)
+        keys = F.broadcast(up.rows.select(key).distinct())
+        kept = up.existing.join(keys, key, "left_anti")
+        merged = stage_write(kept.unionByName(up.rows.select(*kept.columns)), path, up.cols)
+        swap_in(merged, path, up.read)
+        shutil.rmtree(up.stage.root)
 
 
 def register_table(
@@ -371,16 +384,16 @@ def upsert_with_changelog(
 
     Scale notes: change rows are computed with one broadcast-key join
     against the existing slice — with ``partition_col``, only the
-    partitions the updates touch, found through the same stage as
-    :func:`upsert_by_key` (a batch that touches no existing partition
-    is committed by rename); each commit
+    partitions the updates touch, found and committed through the same
+    stage and swap as :func:`upsert_by_key` (a batch that touches no
+    existing partition only adds files); each commit
     is its own ``_commit_version=N`` directory so version range reads
     prune directories, and version discovery is one directory listing
     (not a changelog scan).
 
     Commit protocol (same as ``sources.snapshots``): the change rows
-    are staged into a dot-prefixed directory (invisible to Spark's
-    file index), then published with one atomic ``os.rename`` to
+    are staged by :func:`stage_write` (invisible to Spark's file
+    index), then published with one atomic ``os.rename`` to
     ``_commit_version=N`` — the rename fails if N exists, so racing
     writers serialize and a reader can never observe a partially
     written commit. A crash before the rename leaves only invisible
@@ -391,11 +404,8 @@ def upsert_with_changelog(
     resolves with a single unified commit, which plain parquet cannot
     express).
     """
-    stage = _stage(spark, updates, path, partition_col)
-    if stage is None:
-        existing = _read_table(spark, path)
-    else:
-        updates, existing = stage.rows, stage.existing
+    up = _stage_upsert(spark, updates, path, partition_col)
+    updates, existing = up.rows, up.existing
     cols = updates.columns
     if existing is None:
         changes = updates.withColumn("_change_type", F.lit("insert"))
@@ -415,7 +425,7 @@ def upsert_with_changelog(
         )
         changes = inserts.unionByName(pre).unionByName(post)
     version = _commit_changelog(changes, changelog_path)
-    _commit(stage, updates, path, key, partition_col, existing)
+    _commit(up, path, key)
     return version
 
 
@@ -428,9 +438,7 @@ def _commit_changelog(changes: DataFrame, changelog_path: str) -> int:
     is identical to a ``partitionBy("_commit_version")`` append, so
     readers get the version back as a partition column — but no
     reader can ever list a half-written commit."""
-    os.makedirs(changelog_path, exist_ok=True)
-    stage = os.path.join(changelog_path, f".stage-{uuid.uuid4().hex}")
-    changes.write.mode("errorifexists").parquet(stage)
+    stage = stage_write(changes, changelog_path, []).root
     for _ in range(10_000):  # bounded: a claim race loses ≤ once per rival commit
         taken = [
             int(m.group(1))

@@ -10,9 +10,9 @@ version from the directory listing.
 
 Commit protocol (readers can NEVER observe a torn version):
 
-1. the writer stages the parquet into a ``.stage-<uuid>`` directory —
-   dot-prefixed, so Spark's file index ignores it even if a reader
-   lists the table mid-write;
+1. the writer stages the parquet with ``sinks.stage_write`` into a
+   dot-prefixed directory, so Spark's file index ignores it even if a
+   reader lists the table mid-write;
 2. the version number is CLAIMED by ``os.mkdir(_v=N)`` — a primitive
    with true no-replace semantics (EEXIST even when the target is an
    existing EMPTY directory, which POSIX ``rename`` would silently
@@ -71,8 +71,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from real_time_fraud_detection_lakehouse_spark.sources.sinks import STAGE_PREFIX, stage_write
+
 _V_RE = re.compile(r"^_v=(\d+)$")
-_STAGE_PREFIX = ".stage-"
 COMMIT_MARKER = "_COMMITTED"
 
 
@@ -127,9 +128,7 @@ def snapshot_write(df: DataFrame, path: str) -> int:
     safe against a concurrent writer (one of the two gets N, the other
     N+1) and against a crash at any step (readers never see the torn
     result)."""
-    os.makedirs(path, exist_ok=True)
-    stage = os.path.join(path, f"{_STAGE_PREFIX}{uuid.uuid4().hex}")
-    df.write.mode("errorifexists").parquet(stage)
+    stage = stage_write(df, path, []).root
     for _ in range(10_000):  # bounded: a claim race loses ≤ once per rival commit
         taken = [v for v, _ in _version_dirs(path)]
         version = (max(taken) + 1) if taken else 1
@@ -851,7 +850,7 @@ def _vacuum_published_locked(
             if v not in keep_vs:
                 shutil.rmtree(os.path.join(tdir, f"_v={v}"), ignore_errors=True)
         for name in os.listdir(tdir) if os.path.isdir(tdir) else []:
-            if name.startswith(_STAGE_PREFIX):
+            if name.startswith(STAGE_PREFIX):
                 shutil.rmtree(os.path.join(tdir, name), ignore_errors=True)
     return doomed
 
@@ -872,6 +871,6 @@ def vacuum_snapshots(path: str, keep: int = 2) -> list[int]:
         shutil.rmtree(os.path.join(path, f"_v={v}"), ignore_errors=True)
     if os.path.isdir(path):
         for name in os.listdir(path):
-            if name.startswith(_STAGE_PREFIX):
+            if name.startswith(STAGE_PREFIX):
                 shutil.rmtree(os.path.join(path, name), ignore_errors=True)
     return doomed

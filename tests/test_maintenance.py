@@ -47,6 +47,30 @@ def test_compact_partitions_rewrites_only_crowded(spark, tmp_path):
     assert compact_partitions(spark, path, ["p"], max_files_per_partition=1) == {}
 
 
+def test_compact_partitions_escaped_and_null_partitions(spark, tmp_path):
+    """Partition values Spark escapes on disk (``a:b`` → ``p=a%3Ab``)
+    and NULL (``__HIVE_DEFAULT_PARTITION__``) are compacted like any
+    other: every partition the call reports ends with one file, and the
+    rows are unchanged. Matching values by their directory name as a
+    string skipped both while still reporting them."""
+    path = str(tmp_path / "t")
+    for i in range(3):
+        spark.createDataFrame(
+            [(i * 3, "a:b"), (i * 3 + 1, "plain"), (i * 3 + 2, None)], "id int, p string"
+        ).coalesce(1).write.mode("append").partitionBy("p").parquet(path)
+    rows_before = sorted(map(tuple, spark.read.parquet(path).collect()), key=str)
+
+    rewritten = compact_partitions(spark, path, ["p"], max_files_per_partition=1)
+    assert rewritten == {
+        "p=a%3Ab": 3,
+        "p=plain": 3,
+        "p=__HIVE_DEFAULT_PARTITION__": 3,
+    }
+    after = partition_file_counts(path, ["p"])
+    assert {part: after[part] for part in rewritten} == dict.fromkeys(rewritten, 1)
+    assert sorted(map(tuple, spark.read.parquet(path).collect()), key=str) == rows_before
+
+
 def test_write_partitioned_compact_one_file_per_partition(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.range(3000).select(

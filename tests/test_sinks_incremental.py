@@ -494,8 +494,8 @@ def test_corrupt_fact_table_raises_instead_of_reappending(spark, tmp_path):
 
 def test_upsert_concurrent_disjoint_partitions(spark, tmp_path):
     """Two writers upserting DISJOINT partitions concurrently compose:
-    dynamic partition overwrite rewrites only each writer's own
-    partitions, so neither clobbers the other. This is the documented
+    each swap replaces only its writer's own partitions, so neither
+    clobbers the other. This is the documented
     concurrency contract of the partition-scoped upsert (disjointness
     is the caller's responsibility — same-partition writers need a
     real transaction log, i.e. Delta).
@@ -511,8 +511,8 @@ def test_upsert_concurrent_disjoint_partitions(spark, tmp_path):
     upsert_by_key(spark, base, path, "k", partition_col="p")
 
     # --- deterministic interleave: A stages its merge plan for p1,
-    # B completes a full upsert of p2, then A writes. A's dynamic
-    # overwrite touches only p1, so B's p2 write must survive.
+    # B completes a full upsert of p2, then A writes. A's swap
+    # touches only p1, so B's p2 write must survive.
     a_updates = spark.createDataFrame([("k1", 10, "p1")], "k string, v int, p string")
     b_updates = spark.createDataFrame([("k2", 20, "p2")], "k string, v int, p string")
     # (the function reads `existing` at call time; calling B first then
@@ -597,9 +597,9 @@ def test_upsert_insert_only_job_count(spark, tmp_path):
 
 
 def test_upsert_timestamp_partition_merges_whole_table(spark, tmp_path):
-    """A timestamp partition column takes the full-table merge (its
-    directory name depends on the session time zone): updates and
-    inserts both land, and no stage is written."""
+    """A timestamp partition column reads and replaces every partition
+    directory (its directory name depends on the session time zone):
+    updates and inserts both land, and no stage is left behind."""
     import datetime
     import glob
     import os
@@ -679,6 +679,91 @@ def test_changelog_escaped_partition_preimages(spark, tmp_path):
         for r in read_changes(spark, log, starting_version=2).collect()
     }
     assert kinds == {"update_preimage", "update_postimage"}
+
+
+def test_swap_crash_keeps_every_row_on_disk(spark, tmp_path, monkeypatch):
+    """A swap that crashes after retiring the replaced files, once in a
+    scoped overlap upsert and once in compact_partitions: the table is
+    short for readers, but every pre-call row is still on disk, under
+    the table or under its stage, and a read of the table lists no
+    staged file."""
+    import os
+
+    import pytest
+
+    from real_time_fraud_detection_lakehouse_spark.sources import sinks
+    from real_time_fraud_detection_lakehouse_spark.sources.maintenance import (
+        compact_partitions,
+    )
+
+    real_rename = os.rename
+
+    def rename_failing_first_publish(src_path, dst_path):
+        # the swap retires the replaced files into the stage first; the
+        # first move out of it is the first publish
+        if sinks.STAGE_PREFIX not in dst_path:
+            raise OSError("injected: crash between retiring and publishing")
+        real_rename(src_path, dst_path)
+
+    schema = "k string, v int, p string"
+    upserted, compacted = str(tmp_path / "upserted"), str(tmp_path / "compacted")
+    upsert_by_key(
+        spark,
+        spark.createDataFrame([("a", 1, "p1"), ("b", 2, "p1"), ("c", 3, "p2")], schema),
+        upserted,
+        "k",
+        partition_col="p",
+    )
+    for rows in ([("a", 1, "p1"), ("c", 3, "p2")], [("b", 2, "p1")]):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").partitionBy(
+            "p"
+        ).parquet(compacted)
+    update = spark.createDataFrame([("a", 10, "p1")], schema)
+    calls = {
+        upserted: lambda: upsert_by_key(spark, update, upserted, "k", partition_col="p"),
+        compacted: lambda: compact_partitions(spark, compacted, ["p"]),
+    }
+    for path, call in calls.items():
+        before = {tuple(r) for r in spark.read.parquet(path).select("k", "v").collect()}
+        with monkeypatch.context() as m:
+            m.setattr(sinks.os, "rename", rename_failing_first_publish)
+            with pytest.raises(OSError, match="injected"):
+                call()
+        table = spark.read.parquet(path)
+        assert not [f for f in table.inputFiles() if sinks.STAGE_PREFIX in f]
+        assert table.count() < len(before)  # the crash window: p1 is short
+        files = [
+            os.path.join(d, n)
+            for d, _dirs, names in os.walk(path)
+            for n in names
+            if n.endswith(".parquet")
+        ]
+        on_disk = spark.read.schema("k string, v int").parquet(*files).collect()
+        assert before <= {tuple(r) for r in on_disk}, path
+
+
+def test_parquet_rewrites_go_through_the_stage_swap():
+    """Every in-place rewrite of a parquet table goes through
+    ``sinks.stage_write`` / ``sinks.swap_in``: no dynamic partition
+    overwrite anywhere in the package, no materialize-then-overwrite
+    ``localCheckpoint`` in the sinks or maintenance, and the stage
+    prefix spelled once. Source scan only."""
+    import os
+
+    import real_time_fraud_detection_lakehouse_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    sources = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as fh:
+                    sources[os.path.relpath(path, root)] = fh.read()
+    assert [rel for rel, text in sources.items() if "partitionOverwriteMode" in text] == []
+    for rel in ("sinks.py", "maintenance.py"):
+        assert "localCheckpoint" not in sources[os.path.join("sources", rel)], rel
+    assert sum(text.count(".stage-") for text in sources.values()) == 1
 
 
 def test_scd2_apply_all_merge_paths(spark):
