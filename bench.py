@@ -16,6 +16,11 @@ silver+gold batch over ~1M rows), then the analytics views query the
 materialized gold tables (the reference's Trino-over-gold path).
 Relational/LLM queries read the testdata directly. Every query is
 forced end-to-end with the noop sink.
+
+Every sample is one ``lakebench.trace`` span, and every session keeps
+a Spark event log; BENCH_DETAIL.json's ``layers`` block folds it into
+per-entry counters (jobs, tasks, task CPU, GC, shuffle/spill/I/O
+bytes, driver-only time, build and execution time).
 """
 
 from __future__ import annotations
@@ -28,6 +33,9 @@ import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark.sql import DataFrame
+
+from lakebench.trace import Tracer, fold
 from real_time_fraud_detection_lakehouse_spark.core.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -518,7 +526,168 @@ UNTIMED: dict[str, set[str]] = {
 }
 
 
-def _calibration_probe(spark) -> float:
+#: per-entry counters of the ``layers`` block (``lakebench.trace.fold``)
+LAYER_COUNTERS = (
+    "jobs", "tasks", "task_cpu_ms", "gc_ms", "shuffle_bytes", "spill_bytes",
+    "input_bytes", "output_bytes", "driver_ms", "build_ms", "exec_ms",
+)
+
+
+def medallion_frames(spark, sf_dir: str, warehouse: str) -> dict:
+    """The medallion materialized under ``warehouse``, read back: on the
+    first call silver is written once (REBALANCE hint, ~1 file per day)
+    and the five gold tables are written from it as concurrent jobs.
+    ``transactions`` is the raw ``transactions_df`` source, as in
+    ``plans.gold.gold_frames``: transaction-scanning screens read what
+    ``__spark_entry__`` hands them, not the filtered, wider silver."""
+    from real_time_fraud_detection_lakehouse_spark.plans import gold as gold_mod
+    from real_time_fraud_detection_lakehouse_spark.sources.maintenance import (
+        write_partitioned_compact,
+    )
+    from real_time_fraud_detection_lakehouse_spark.sources.transactions import (
+        transactions_df,
+    )
+
+    gold = {
+        "fact": gold_mod.fact_transactions,
+        "dim_customer": gold_mod.dim_customer,
+        "dim_merchant": gold_mod.dim_merchant,
+        "dim_time": gold_mod.dim_time,
+        "dim_location": gold_mod.dim_location,
+    }
+
+    def path(name: str) -> str:
+        return os.path.join(warehouse, name)
+
+    if not os.path.exists(path("silver")):
+        write_partitioned_compact(
+            gold_mod.gold_frames(spark, sf_dir)["silver"], path("silver"),
+            ["year", "month", "day"],
+        )
+        silver = spark.read.parquet(path("silver"))
+        # the five gold writes are independent: threads just enqueue
+        # concurrent Spark jobs that share the cores
+        with ThreadPoolExecutor(max_workers=len(gold)) as pool:
+            list(pool.map(
+                lambda t: gold[t](silver).write.mode("overwrite").parquet(path(t)),
+                gold,
+            ))
+    frames = {t: spark.read.parquet(path(t)) for t in ("silver", *gold)}
+    frames["transactions"] = transactions_df(spark, sf_dir)
+    return frames
+
+
+def entry(spark, name: str, cache: dict, sf_dir: str = SF_DIR, warehouse: str | None = None):
+    """``name``'s builder and its input frames. Views and dashboards
+    read the medallion materialized under ``warehouse``
+    (:func:`medallion_frames`); relational and LLM operators read the
+    testdata tables at ``sf_dir``. ``cache`` is the caller's per-session
+    dict of input frames: every entry of a session gets the same frame
+    objects, which session-shared surfaces are keyed by. A name with no
+    builder raises KeyError: nothing skips timing silently."""
+    from real_time_fraud_detection_lakehouse_spark.core.catalog import (
+        TESTDATA_TABLES,
+        table,
+    )
+    from real_time_fraud_detection_lakehouse_spark.operators import LLM_OPS
+    from real_time_fraud_detection_lakehouse_spark.plans.dashboards import DASHBOARDS
+    from real_time_fraud_detection_lakehouse_spark.plans.relational import RELATIONAL
+    from real_time_fraud_detection_lakehouse_spark.plans.views import VIEWS
+
+    for registry, key, build in (
+        ({**VIEWS, **DASHBOARDS}, ("medallion", sf_dir, warehouse),
+         lambda: medallion_frames(spark, sf_dir, warehouse)),
+        ({**RELATIONAL, **LLM_OPS}, ("testdata", sf_dir),
+         lambda: {t: table(spark, sf_dir, t) for t in TESTDATA_TABLES}),
+    ):
+        if name in registry:
+            if key not in cache:
+                cache[key] = build()
+            return registry[name][0], cache[key]
+    raise KeyError(f"no registered builder for entry {name!r}")
+
+
+def timed(tracer, name: str, build, n: int = 2, force: bool = True) -> float:
+    """Min of ``n`` samples, in seconds, of ``build()``, forced through
+    the noop sink when it returns a DataFrame and ``force`` is set (a
+    stream runner returns its output, already written). Each sample is
+    one ``tracer.span(name)`` with ``build_ms`` and ``exec_ms`` as its
+    call's extra (``lakebench.workloads.GoldAnalytics.op``). The builder
+    call stays inside the timed region: iterative operators
+    (dedup_clusters) run driver actions at build time. The first sample
+    is the cold one: the span's first call in a session has index 0."""
+    walls = []
+    for _ in range(n):
+        with tracer.span(name) as call:
+            t0 = time.perf_counter()
+            out = build()
+            t1 = time.perf_counter()
+            if force and isinstance(out, DataFrame):
+                out.write.format("noop").mode("overwrite").save()
+            call.extra["build_ms"] = (t1 - t0) * 1000.0
+            call.extra["exec_ms"] = (time.perf_counter() - t1) * 1000.0
+        walls.append(call.wall_ms / 1000.0)
+    return round(min(walls), 3)
+
+
+def _layers(tracer, event_log: str) -> dict[str, dict[str, float]]:
+    """Per span, the counters of its last (for min-of-N: a warm) sample,
+    folded from the session's event log."""
+    last = Tracer(False)
+    last.calls = list({c.span: c for c in tracer.calls}.values())
+    flat = fold(last, event_log, {c.span: list(LAYER_COUNTERS) for c in last.calls})
+    layers: dict[str, dict[str, float]] = {}
+    for key, value in flat.items():
+        span, counter = key.rsplit(".", 1)
+        layers.setdefault(span, {})[counter] = (
+            round(value, 1) if counter.endswith("_ms") else int(value)
+        )
+    return layers
+
+
+class _Session:
+    """One bench session: a warmed Spark session, the tracer its timed
+    entries run under, the input frames its entries share (the
+    :func:`entry` cache) and its event log (one uncompressed,
+    non-rolling file under the warehouse, as ``lakebench/run.py``
+    writes it).
+
+    The suite opens a fresh one at every phase boundary: the phases
+    track PLAN scaling, and heap/state wear from earlier phases
+    inflates their timings up to ~6x (measured across rounds 5-8)."""
+
+    def __init__(self, app_name: str, warehouse: str, conf: dict | None = None) -> None:
+        self.log_dir = os.path.join(warehouse, "eventlog", app_name)
+        os.makedirs(self.log_dir)
+        self.spark = get_spark(
+            app_name,
+            master=f"local[{CPUS}]",
+            extra_conf={
+                "spark.sql.shuffle.partitions": str(
+                    max(int(CPUS) if CPUS != "*" else 32, 8)
+                ),
+                **_RESILIENCE_CONF,
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": f"file://{self.log_dir}",
+                "spark.eventLog.compress": "false",
+                "spark.eventLog.rolling.enabled": "false",
+                **(conf or {}),
+            },
+        )
+        # warm the JVM so timings reflect steady state, not session startup
+        self.spark.range(1_000_000).selectExpr("sum(id)").collect()
+        self.tracer = Tracer(True)
+        self.tracer.attach(self.spark)
+        self.frames: dict = {}
+
+    def stop(self) -> dict[str, dict[str, float]]:
+        """Stop the session; its timed spans' counters."""
+        self.spark.stop()
+        (log,) = os.listdir(self.log_dir)
+        return _layers(self.tracer, os.path.join(self.log_dir, log))
+
+
+def _calibration_probe(s: _Session, name: str) -> float:
     """Fixed synthetic host-speed probe (round-11 verdict #8): a
     pure-CPU whole-stage-codegen job — xxhash64 fold over a pinned
     1G-row range on exactly 32 partitions, no I/O, no shuffle beyond
@@ -528,36 +697,21 @@ def _calibration_probe(spark) -> float:
     host-normalized ratios that agree across differently-loaded
     sessions where raw seconds diverge (the 554-992 s drift band).
     The probe itself is ~1-2 s — noise at suite scale."""
-    samples = []
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(0, 1_000_000_000, 1, 32).selectExpr(
+    return timed(
+        s.tracer,
+        name,
+        lambda: s.spark.range(0, 1_000_000_000, 1, 32).selectExpr(
             "bit_xor(xxhash64(id))"  # overflow-free fold (ANSI mode)
-        ).collect()
-        samples.append(time.time() - t0)
-    return round(min(samples), 3)
-
-
-def _fresh_session(old_spark, app_name: str):
-    """Stop the worn session and start a clean one with the scaling
-    phases' shared conf + JVM warm-up — the phases exist to track PLAN
-    scaling, and heap/state wear from earlier phases inflates their
-    timings up to ~6x (measured across rounds 5-8)."""
-    from real_time_fraud_detection_lakehouse_spark.core.session import get_spark
-
-    old_spark.stop()
-    spark = get_spark(
-        app_name,
-        master=f"local[{CPUS}]",
-        extra_conf={
-            "spark.sql.shuffle.partitions": str(
-                max(int(CPUS) if CPUS != "*" else 32, 8)
-            ),
-            **_RESILIENCE_CONF,
-        },
+        ),
+        n=3,
     )
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    return spark
+
+
+def _fresh_paths(warehouse: str, *names: str) -> list[str]:
+    """Not yet existing paths in a new directory under ``warehouse``:
+    a stream's output and checkpoint, or a store root, per sample."""
+    root = tempfile.mkdtemp(dir=warehouse)
+    return [os.path.join(root, n) for n in names]
 
 
 #: probe-relative ratio movement (either direction) that flags a
@@ -610,125 +764,59 @@ def _flag_movers(detail: dict, prior: dict | None) -> list[tuple[str, float, flo
 
 
 def main() -> None:
-    from real_time_fraud_detection_lakehouse_spark.core.catalog import (
-        TESTDATA_TABLES,
-        table,
-    )
-    from real_time_fraud_detection_lakehouse_spark.operators import LLM_OPS
-    from real_time_fraud_detection_lakehouse_spark.plans import gold as gold_mod
-    from real_time_fraud_detection_lakehouse_spark.plans.dashboards import DASHBOARDS
-    from real_time_fraud_detection_lakehouse_spark.plans.gold import gold_frames
-    from real_time_fraud_detection_lakehouse_spark.plans.relational import RELATIONAL
-    from real_time_fraud_detection_lakehouse_spark.plans.views import VIEWS
-    from real_time_fraud_detection_lakehouse_spark.sources.maintenance import (
-        write_partitioned_compact,
-    )
-
-    spark = get_spark(
-        "bench",
-        master=f"local[{CPUS}]",
-        extra_conf={
-            "spark.sql.shuffle.partitions": str(max(int(CPUS) if CPUS != "*" else 32, 8)),
-            # first get_spark launches the JVM, so driver memory applies
-            # here (local mode: executors live in the driver JVM). The
-            # default 1g heap makes late-suite timings GC-bound.
-            "spark.driver.memory": "16g",
-            # JVM unified-logging warnings (e.g. gc,alloc GCLocker
-            # retries) default to STDOUT and would pollute the one-
-            # JSON-line contract; route them to stderr.
-            "spark.driver.extraJavaOptions": "-Xlog:all=warning:stderr",
-            **_RESILIENCE_CONF,
-        },
-    )
-    # warm the JVM so timings reflect steady state, not session startup
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    probe_start = _calibration_probe(spark)
-
     timings: dict[str, float] = {}
-    t_suite = time.time()
+    layers: dict[str, dict[str, float]] = {}
     warehouse = tempfile.mkdtemp(prefix="bench_gold_")
+    # the first session launches the JVM, so driver memory applies here
+    # (local mode: executors live in the driver JVM). The default 1g heap
+    # makes late-suite timings GC-bound. JVM unified-logging warnings
+    # (e.g. gc,alloc GCLocker retries) default to STDOUT and would
+    # pollute the one-JSON-line contract; route them to stderr.
+    s = _Session("bench", warehouse, {
+        "spark.driver.memory": "16g",
+        "spark.driver.extraJavaOptions": "-Xlog:all=warning:stderr",
+    })
+
+    def fresh(app_name: str) -> _Session:
+        nonlocal s
+        layers.update(s.stop())
+        s = _Session(app_name, warehouse)
+        return s
+
+    def time_entry(name: str) -> float:
+        builder, frames = entry(s.spark, name, s.frames, warehouse=warehouse)
+        return timed(s.tracer, name, lambda: builder(frames))
+
     try:
-        # --- phase 1: materialize the medallion (reference: silver+gold batch)
-        t0 = time.time()
-        g = gold_frames(spark, SF_DIR)
-        # REBALANCE-hint write: ~1 file per day-partition instead of
-        # tasks x partitions small-file fan-out (sources/maintenance.py)
-        write_partitioned_compact(
-            g["silver"], os.path.join(warehouse, "silver"), ["year", "month", "day"]
+        probe_start = _calibration_probe(s, "probe_start")
+        t_suite = time.time()
+
+        # --- phase 1: materialize the medallion (reference: silver+gold
+        # batch): one silver computation, the gold tables built FROM the
+        # materialized silver (the silver-job-then-gold-job flow)
+        timings["etl_silver_gold"] = timed(
+            s.tracer, "etl_silver_gold",
+            lambda: medallion_frames(s.spark, SF_DIR, warehouse), n=1,
         )
-        # build gold FROM the materialized silver (the reference's
-        # silver-job-then-gold-job flow): one silver computation total,
-        # not one per gold table
-        silver_mat = spark.read.parquet(os.path.join(warehouse, "silver"))
-        gold_builders = {
-            "fact": gold_mod.fact_transactions,
-            "dim_customer": gold_mod.dim_customer,
-            "dim_merchant": gold_mod.dim_merchant,
-            "dim_time": gold_mod.dim_time,
-            "dim_location": gold_mod.dim_location,
-        }
-        # the five gold writes are independent — submit them as
-        # concurrent Spark jobs (threads just enqueue jobs; the
-        # scheduler shares the 32 cores across them)
-        with ThreadPoolExecutor(max_workers=len(gold_builders)) as pool:
-            list(
-                pool.map(
-                    lambda kv: kv[1](silver_mat)
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(warehouse, kv[0])),
-                    gold_builders.items(),
-                )
-            )
-        timings["etl_silver_gold"] = round(time.time() - t0, 3)
 
         # --- phase 2: analytics over materialized gold (fresh session:
         # the ETL write's heap wear otherwise leaks into the view
-        # timings — state_summary was an untriaged r9 mover)
-        spark = _fresh_session(spark, "bench-views")
-        mat = {
-            name: spark.read.parquet(os.path.join(warehouse, name))
-            for name in ("silver", "fact", "dim_customer", "dim_merchant", "dim_time", "dim_location")
-        }
-        mat["transactions"] = mat["silver"]
-        registry = {**VIEWS, **DASHBOARDS}
-
-        def _timed(build) -> float:
-            # min-of-2 (same protocol as the scaling block): single
-            # warm samples at sub-second scale flapped ±50% round over
-            # round in a shared session; min is the standard
-            # noise-robust micro-bench statistic. The first run doubles
-            # as the warm-up. The builder call stays INSIDE the timed
-            # region: iterative operators (dedup_clusters) run driver
-            # actions at build time.
-            samples = []
-            for _ in range(2):
-                t0 = time.time()
-                build().write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
-            return round(min(samples), 3)
-
+        # timings — state_summary was an untriaged r9 mover). min-of-2:
+        # single warm samples at sub-second scale flapped ±50% round
+        # over round in a shared session; the first run doubles as the
+        # warm-up.
+        fresh("bench-views")
         for name in DOMAIN:
-            builder, _ = registry[name]
-            timings[name] = _timed(lambda: builder(mat))
+            timings[name] = time_entry(name)
 
         # --- phase 3: relational + LLM operators over raw testdata.
         # Fresh session at the phase boundary and every FRESH_EVERY
         # entries: bounds the monotone heap wear that inflated
         # late-phase timings (see FRESH_EVERY note).
-        ops = {**RELATIONAL, **LLM_OPS}
-        # a DIRECT name with no registry builder is a HARD error, not a
-        # silent skip (the no-silent-caps rule — multimodal_phash_dedup
-        # briefly hit that skip as an entry-closure op invisible here)
-        missing = [n for n in DIRECT if n not in ops]
-        if missing:
-            raise RuntimeError(f"DIRECT entries with no builder: {missing}")
-        frames = None
         for i, name in enumerate(DIRECT):
             if i % FRESH_EVERY == 0:
-                spark = _fresh_session(spark, f"bench-direct-{i // FRESH_EVERY}")
-                frames = {t: table(spark, SF_DIR, t) for t in TESTDATA_TABLES}
-            builder, _ = ops[name]
-            timings[name] = _timed(lambda: builder(frames))
+                fresh(f"bench-direct-{i // FRESH_EVERY}")
+            timings[name] = time_entry(name)
 
         # --- retry-confirm pass (round-13 verdict #2): on a bursty
         # host even min-of-2 trips spurious movers — 16 flagged on an
@@ -767,73 +855,39 @@ def main() -> None:
                     f"slowdown(s): {suspects}",
                     file=sys.stderr,
                 )
-                spark = _fresh_session(spark, "bench-retry")
-                mat_r = {
-                    name: spark.read.parquet(os.path.join(warehouse, name))
-                    for name in (
-                        "silver", "fact", "dim_customer", "dim_merchant",
-                        "dim_time", "dim_location",
-                    )
-                }
-                mat_r["transactions"] = mat_r["silver"]
-                frames_r = {t: table(spark, SF_DIR, t) for t in TESTDATA_TABLES}
+                fresh("bench-retry")
                 for name in suspects:
-                    if name in registry:
-                        builder, _ = registry[name]
-                        retimed = _timed(lambda: builder(mat_r))
-                    else:
-                        builder, _ = ops[name]
-                        retimed = _timed(lambda: builder(frames_r))
-                    if retimed < timings[name]:
-                        print(
-                            f"  {name}: {timings[name]} -> {retimed} "
-                            "(burst cleared)",
-                            file=sys.stderr,
-                        )
-                        timings[name] = retimed
-                    else:
-                        print(
-                            f"  {name}: {timings[name]} reproduced "
-                            f"(retry {retimed}) — real mover",
-                            file=sys.stderr,
-                        )
+                    retimed = time_entry(name)
+                    verdict = "burst cleared" if retimed < timings[name] else "real mover"
+                    print(f"  {name}: {timings[name]} -> retry {retimed} ({verdict})",
+                          file=sys.stderr)
+                    timings[name] = min(timings[name], retimed)
 
         # --- phase 3c: shared-surface build costs (r16 verdict #4).
         # Three operator families materialize a session-shared persisted
         # intermediate on first touch (ring pairs+CC, the mule-hub
-        # surface, the global-containment pair stream). _timed's
-        # min-of-2 discards the build sample, so per-entry numbers show
-        # the WARM cost; this block times each family's first consumer
-        # cold-vs-warm in a fresh session and reports the difference,
-        # keeping the suite's accounting honest (the suite wall-clock
-        # already pays the build once). Additions-only: no existing
-        # timing or field changes.
-        spark = _fresh_session(spark, "bench-share-build")
-        mat_s = {
-            name: spark.read.parquet(os.path.join(warehouse, name))
-            for name in ("silver", "fact", "dim_customer", "dim_merchant",
-                         "dim_time", "dim_location")
-        }
-        mat_s["transactions"] = mat_s["silver"]
-        frames_s = {t: table(spark, SF_DIR, t) for t in TESTDATA_TABLES}
+        # surface, the global-containment pair stream). Per-entry
+        # min-of-2 numbers show the WARM cost; this block times each
+        # family's first consumer in a fresh session and reports the
+        # timer's cold sample minus its warm one, keeping the suite's
+        # accounting honest (the suite wall-clock already pays the
+        # build once).
+        fresh("bench-share-build")
         share_build_detail: dict[str, dict[str, float]] = {}
         for family, first_consumer in (
-            ("ring", lambda: registry["dash_fraud_rings"][0](mat_s)),
+            ("ring", "dash_fraud_rings"),
             # r17: the PR/RP score surfaces (5 consumer screens) —
             # timed BEFORE hub, whose build composes them, so each
             # family's build lands on its own line and "hub" reports
             # the incremental conjunction cost given warm PR/RP
-            ("pr", lambda: registry["dash_merchant_centrality"][0](mat_s)),
-            ("rp", lambda: registry["dash_merchant_risk_propagation"][0](mat_s)),
-            ("hub", lambda: registry["dash_mule_hubs"][0](mat_s)),
-            ("containment", lambda: ops["dedup_containment_global"][0](frames_s)),
+            ("pr", "dash_merchant_centrality"),
+            ("rp", "dash_merchant_risk_propagation"),
+            ("hub", "dash_mule_hubs"),
+            ("containment", "dedup_containment_global"),
         ):
-            t0 = time.time()
-            first_consumer().write.format("noop").mode("overwrite").save()
-            cold = round(time.time() - t0, 3)
-            t0 = time.time()
-            first_consumer().write.format("noop").mode("overwrite").save()
-            warm = round(time.time() - t0, 3)
+            builder, frames = entry(s.spark, first_consumer, s.frames, warehouse=warehouse)
+            timed(s.tracer, f"share_build/{family}", lambda: builder(frames))
+            cold, warm = (round(c.wall_ms / 1000.0, 3) for c in s.tracer.calls[-2:])
             share_build_detail[family] = {
                 "cold_sec": cold,
                 "warm_sec": warm,
@@ -845,7 +899,11 @@ def main() -> None:
 
         # --- phase 4: streaming exactly-once dedup micro-bench
         # (source setup excluded; timed part = the AvailableNow stream
-        # run incl. dropDuplicatesWithinWatermark state)
+        # run incl. dropDuplicatesWithinWatermark state). min-of-2 like
+        # every other timed query, a fresh checkpoint/out per sample (a
+        # reused checkpoint would no-op the second run). r6 recorded a
+        # phantom +21% "regression" here from a cold single sample in a
+        # worn session.
         from real_time_fraud_detection_lakehouse_spark.sources.transactions import (
             transactions_df,
         )
@@ -853,27 +911,17 @@ def main() -> None:
             dedup_stream,
         )
 
-        spark = _fresh_session(spark, "bench-streaming")
+        spark = fresh("bench-streaming").spark
         sdir = os.path.join(warehouse, "dedup_src")
         tx = transactions_df(spark, SF_DIR)
         tx.write.mode("overwrite").parquet(sdir)
         tx.write.mode("append").parquet(sdir)  # at-least-once replay
         n_dedup_in = spark.read.parquet(sdir).count()
-        # min-of-2 like every other timed query (fresh checkpoint/out
-        # per sample — a reused checkpoint would no-op the second run).
-        # r6 recorded a phantom +21% "regression" here from a cold
-        # single sample in a worn session; isolated min-of-2 = 2.43 s.
-        dedup_samples = []
-        for i in range(2):
-            t0 = time.time()
-            dedup_stream(
-                spark,
-                sdir,
-                os.path.join(warehouse, f"dedup_out{i}"),
-                os.path.join(warehouse, f"dedup_ckpt{i}"),
-            )
-            dedup_samples.append(time.time() - t0)
-        timings["streaming_dedup"] = round(min(dedup_samples), 3)
+        timings["streaming_dedup"] = timed(
+            s.tracer, "streaming_dedup",
+            lambda: dedup_stream(spark, sdir, *_fresh_paths(warehouse, "out", "ckpt")),
+            force=False,
+        )
 
         # --- phase 4b: streaming THROUGHPUT (rows/s). The reference's
         # one streaming anchor is 200-500 tx per 10 s micro-batch
@@ -888,14 +936,12 @@ def main() -> None:
 
         cdc = os.path.join(warehouse, "cdc_src")
         n_cdc = write_cdc_fixture(spark, SF_DIR, cdc)
-        t0 = time.time()
-        run_bronze_stream(
-            spark,
-            cdc,
-            os.path.join(warehouse, "bronze_tp_out"),
-            os.path.join(warehouse, "bronze_tp_ckpt"),
+        bronze_sec = timed(
+            s.tracer, "streaming_bronze",
+            lambda: run_bronze_stream(spark, cdc, *_fresh_paths(warehouse, "out", "ckpt")),
+            n=1,
+            force=False,
         )
-        bronze_sec = round(time.time() - t0, 3)
         streaming_throughput = {
             "bronze_rows": n_cdc,
             "bronze_sec": bronze_sec,
@@ -909,58 +955,50 @@ def main() -> None:
         # publish gold as one manifest group → re-publish (parquet
         # copy, no feature-chain re-run) → O(1) metadata rollback →
         # ledger read: the snapshot store's end-to-end cost at SF_DIR.
-        # min-of-2 like every other timed entry (round-11 verdict #6 —
-        # the suite's #2-cost entry was its only single-sample one);
+        # min-of-2 like every other timed entry (round-11 verdict #6);
         # fresh store root per sample, the streaming_dedup idiom: a
         # reused root would append groups and change the measured work.
         from real_time_fraud_detection_lakehouse_spark.plans.gold import (
             published_gold_history,
         )
 
-        hist_samples = []
-        for i in range(2):
-            t0 = time.time()
-            published_gold_history(
-                spark, SF_DIR, os.path.join(warehouse, f"published{i}")
-            ).write.format("noop").mode("overwrite").save()
-            hist_samples.append(time.time() - t0)
-        timings["history_published_gold"] = round(min(hist_samples), 3)
+        timings["history_published_gold"] = timed(
+            s.tracer, "history_published_gold",
+            lambda: published_gold_history(
+                spark, SF_DIR, *_fresh_paths(warehouse, "published")
+            ),
+        )
 
         # --- phase 5: standing scaling block (10x key-shifted replica;
-        # warm-vs-warm so the ratio measures plan scaling, not codegen).
-        # Runs in a FRESH session: measured in-session ratios are
-        # inflated up to 3x by heap/state left over from the 24
-        # preceding queries (q_top_customers: 6.1x polluted vs 2.2x
-        # clean), and the block exists to track plan regressions, not
-        # session wear.
+        # min-of-3 with the first sample as warm-up, so the ratio
+        # measures plan scaling, not codegen). Runs in a FRESH session:
+        # measured in-session ratios are inflated up to 3x by heap/state
+        # left over from the preceding queries (q_top_customers: 6.1x
+        # polluted vs 2.2x clean), and the block exists to track plan
+        # regressions, not session wear.
         scaling = None
         if SCALING:
+            from real_time_fraud_detection_lakehouse_spark.core.catalog import table
             from real_time_fraud_detection_lakehouse_spark.sources.replica import (
                 build_replica,
             )
 
-            spark = _fresh_session(spark, "bench-scaling")
+            spark = fresh("bench-scaling").spark
             big_dir = os.path.join(warehouse, "replica")
-            t0 = time.time()
-            build_replica(spark, SF_DIR, big_dir, copies=SCALE_COPIES)
-            build_secs = round(time.time() - t0, 1)
+            build_secs = timed(
+                s.tracer, "scaling/replica_build",
+                lambda: build_replica(spark, SF_DIR, big_dir, copies=SCALE_COPIES),
+                n=1,
+            )
             results: dict[str, dict[str, float]] = {}
             for name in SCALING_QUERIES:
-                builder, _ = ops[name]
                 per_sf: dict[str, float] = {}
                 for label, d in (("base", SF_DIR), ("scaled", big_dir)):
-                    fr = {t: table(spark, d, t) for t in TESTDATA_TABLES}
-                    qdf = builder(fr)
-                    qdf.write.format("noop").mode("overwrite").save()  # warm-up
-                    # min of 2 timed runs: single local[32] samples at
-                    # sub-second scale jitter by several x; min is the
-                    # standard noise-robust micro-bench statistic
-                    samples = []
-                    for _ in range(2):
-                        t0 = time.time()
-                        qdf.write.format("noop").mode("overwrite").save()
-                        samples.append(time.time() - t0)
-                    per_sf[label] = round(min(samples), 3)
+                    builder, frames = entry(spark, name, s.frames, d)
+                    per_sf[label] = timed(
+                        s.tracer, f"scaling/{name}/{label}",
+                        lambda: builder(frames), n=3,
+                    )
                 per_sf["ratio"] = round(per_sf["scaled"] / per_sf["base"], 2)
                 results[name] = per_sf
             ratios = [r["ratio"] for r in results.values()]
@@ -983,6 +1021,7 @@ def main() -> None:
             # n/k — the equi-join fan-out — stays constant).
             from real_time_fraud_detection_lakehouse_spark.operators.similarity import (
                 SEMDEDUP_K,
+                SEMDEDUP_TARGET_CLUSTER,
                 _vec_double,
                 semdedup,
             )
@@ -1004,12 +1043,9 @@ def main() -> None:
                 emb = table(spark, d, "embeddings").select(
                     "vec_id", _vec_double("embedding").alias("v")
                 )
-                samples = []
-                for _ in range(2):
-                    t0 = time.time()
-                    semdedup(emb, k=k).write.format("noop").mode("overwrite").save()
-                    samples.append(time.time() - t0)
-                sem[label] = round(min(samples), 3)
+                sem[label] = timed(
+                    s.tracer, f"semdedup_10x/{label}", lambda: semdedup(emb, k=k)
+                )
             sem["ratio"] = round(sem["scaled"] / sem["base"], 2)
             sem["scaled_k"] = SEMDEDUP_K * SCALE_COPIES
             scaling["semdedup_10x"] = sem
@@ -1033,36 +1069,31 @@ def main() -> None:
             # the scaling session has chewed through the 10x block and
             # heap wear inflates phase-6 timings up to ~6x (measured:
             # dedup_exact scaled 41 s worn vs 3.5 s fresh)
-            spark = _fresh_session(spark, "bench-scaling-100x")
+            spark = fresh("bench-scaling-100x").spark
             huge_dir = os.path.join(warehouse, "replica100")
-            t0 = time.time()
-            build_replica(
-                spark,
-                SF_DIR,
-                huge_dir,
-                copies=100,
-                tables=("documents",),
-                perturb_text=True,
+            build100 = timed(
+                s.tracer, "scaling_100x/replica_build",
+                lambda: build_replica(
+                    spark,
+                    SF_DIR,
+                    huge_dir,
+                    copies=100,
+                    tables=("documents",),
+                    perturb_text=True,
+                ),
+                n=1,
             )
-            build100 = round(time.time() - t0, 1)
             results100: dict[str, dict[str, float]] = {}
-            base_frames = {t: table(spark, SF_DIR, t) for t in TESTDATA_TABLES}
             for name in SCALING_100X_QUERIES:
-                builder, _ = ops[name]
+                builder, frames = entry(spark, name, s.frames)
                 per: dict[str, float] = {}
                 for label, fr in (
-                    ("base", base_frames),
-                    (
-                        "scaled",
-                        {**base_frames, "documents": table(spark, huge_dir, "documents")},
-                    ),
+                    ("base", frames),
+                    ("scaled", {**frames, "documents": table(spark, huge_dir, "documents")}),
                 ):
-                    samples = []
-                    for _ in range(2):
-                        t0 = time.time()
-                        builder(fr).write.format("noop").mode("overwrite").save()
-                        samples.append(time.time() - t0)
-                    per[label] = round(min(samples), 3)
+                    per[label] = timed(
+                        s.tracer, f"scaling_100x/{name}/{label}", lambda: builder(fr)
+                    )
                 per["ratio"] = round(per["scaled"] / per["base"], 2)
                 results100[name] = per
             scaling_100x = {
@@ -1078,17 +1109,21 @@ def main() -> None:
             # gate's per-run cost must move sublinearly in corpus size.
             # The index build is the NIGHTLY pass: timed separately
             # (it scales with the corpus by design); the gate itself
-            # never re-tokenizes corpus text. Fresh session, same
-            # rationale as every scaling block.
+            # never re-tokenizes corpus text. Folding the same arrival
+            # set into each index is the O(arrivals) claim's write-side
+            # half: it must cost the same regardless of corpus size (r11
+            # stretch — the full rebuild is what scales). Fresh session,
+            # same rationale as every scaling block.
             from pyspark.sql import functions as F
 
             from real_time_fraud_detection_lakehouse_spark.operators.dedup import (
                 _INCR_HWM_FRACTION,
                 build_corpus_index,
                 docs_dedup_incremental_maintained,
+                update_corpus_index,
             )
 
-            spark = _fresh_session(spark, "bench-incr-maintained")
+            spark = fresh("bench-incr-maintained").spark
             docs_base = table(spark, SF_DIR, "documents")
             h = docs_base.agg(
                 F.floor(F.max("doc_id") * _INCR_HWM_FRACTION).cast("long")
@@ -1107,28 +1142,19 @@ def main() -> None:
                 ),
             ):
                 idx_root = os.path.join(warehouse, f"incr_index_{label}")
-                t0 = time.time()
-                build_corpus_index({"documents": corpus}, idx_root)
-                maint[f"{label}_index_build_sec"] = round(time.time() - t0, 1)
-                samples = []
-                for _ in range(2):
-                    t0 = time.time()
-                    docs_dedup_incremental_maintained(
-                        spark, arrivals, idx_root
-                    ).write.format("noop").mode("overwrite").save()
-                    samples.append(time.time() - t0)
-                maint[label] = round(min(samples), 3)
-                # the O(arrivals) claim's write-side half: folding the
-                # same arrival set into each index must cost the same
-                # regardless of corpus size (r11 stretch — the full
-                # rebuild above is what scales)
-                from real_time_fraud_detection_lakehouse_spark.operators.dedup import (
-                    update_corpus_index,
+                span = f"incremental_maintained_100x/{label}"
+                maint[f"{label}_index_build_sec"] = timed(
+                    s.tracer, f"{span}/index_build",
+                    lambda: build_corpus_index({"documents": corpus}, idx_root), n=1,
                 )
-
-                t0 = time.time()
-                update_corpus_index({"documents": arrivals}, idx_root)
-                maint[f"{label}_fold_in_sec"] = round(time.time() - t0, 3)
+                maint[label] = timed(
+                    s.tracer, span,
+                    lambda: docs_dedup_incremental_maintained(spark, arrivals, idx_root),
+                )
+                maint[f"{label}_fold_in_sec"] = timed(
+                    s.tracer, f"{span}/fold_in",
+                    lambda: update_corpus_index({"documents": arrivals}, idx_root), n=1,
+                )
             maint["ratio"] = round(maint["scaled"] / maint["base"], 2)
             scaling_100x["incremental_maintained_100x"] = maint
 
@@ -1137,22 +1163,11 @@ def main() -> None:
             # in r7 after the matmul assignment fix took the op from
             # 307 s to ~21 s at this scale — the heaviest operator's
             # scale story belongs in the driver-recorded artifact, not
-            # just builder notes.
-            # r8 protocol change: 6b gets a FRESH session. The 100x
-            # documents block ahead of it (now 5 queries incl. the two
-            # composed curation paths) wears the heap enough to drift
-            # the recorded number 27.8 -> 33+ s while the isolated
-            # measurement stays ~21 s — the same worn-session artifact
-            # as phases 5/6 (and r6's streaming_dedup phantom); the
-            # block exists to track PLAN scaling, so measure it clean.
-            spark = _fresh_session(spark, "bench-semdedup-100x")
-            from real_time_fraud_detection_lakehouse_spark.operators.similarity import (
-                SEMDEDUP_K,
-                SEMDEDUP_TARGET_CLUSTER,
-                _vec_double,
-                semdedup,
-            )
-
+            # just builder notes. r8: a FRESH session — the 100x
+            # documents block ahead of it wears the heap enough to
+            # drift the recorded number 27.8 -> 33+ s while the
+            # isolated measurement stays ~21 s.
+            spark = fresh("bench-semdedup-100x").spark
             emb100_dir = os.path.join(warehouse, "replica100_emb")
             build_replica(
                 spark,
@@ -1167,14 +1182,10 @@ def main() -> None:
                 emb = table(spark, d, "embeddings").select(
                     "vec_id", _vec_double("embedding").alias("v")
                 )
-                n_emb = emb.count()
-                k = max(SEMDEDUP_K, n_emb // SEMDEDUP_TARGET_CLUSTER)
-                samples = []
-                for _ in range(2):
-                    t0 = time.time()
-                    semdedup(emb, k=k).write.format("noop").mode("overwrite").save()
-                    samples.append(time.time() - t0)
-                sem100[label] = round(min(samples), 3)
+                k = max(SEMDEDUP_K, emb.count() // SEMDEDUP_TARGET_CLUSTER)
+                sem100[label] = timed(
+                    s.tracer, f"semdedup_100x/{label}", lambda: semdedup(emb, k=k)
+                )
                 sem100[f"{label}_k"] = k
             sem100["ratio"] = round(sem100["scaled"] / sem100["base"], 2)
             scaling_100x["semdedup_100x"] = sem100
@@ -1182,8 +1193,8 @@ def main() -> None:
         # --- closing calibration probe (fresh session, same warmed
         # conditions as the opening one — worn heap would contaminate
         # the host-speed reading like any other late-suite timing)
-        spark = _fresh_session(spark, "bench-probe-end")
-        probe_end = _calibration_probe(spark)
+        probe_end = _calibration_probe(fresh("bench-probe-end"), "probe_end")
+        layers.update(s.stop())
     finally:
         shutil.rmtree(warehouse, ignore_errors=True)
 
@@ -1214,6 +1225,9 @@ def main() -> None:
         detail["scaling_100x"] = scaling_100x
     detail["streaming_throughput"] = streaming_throughput
     detail["share_build"] = share_build_detail
+    # per timed span, the counters of its last sample (the warm one of a
+    # min-of-N) from the session's event log
+    detail["layers"] = layers
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     # probe-normalized regression gate (round-12 verdict #8): encode
     # BENCH_SCALING.md's triage protocol — compare this run's
@@ -1279,7 +1293,6 @@ def main() -> None:
             file=sys.stderr,
         )
     sys.stdout.flush()
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -41,7 +41,7 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "zstd",
     # r17: zstd level 1 instead of parquet-java's default 3 — measured
     # on the full silver+gold write path at sf0.1 (min-of-3,
-    # scripts/exp_etl_codec.py): snappy 3.96 s / 12.3 MB, zstd:3
+    # interleaved; OPTIMIZATION_r17.md): snappy 3.96 s / 12.3 MB, zstd:3
     # 4.32 s / 9.1 MB, zstd:1 3.99 s / 9.3 MB. Level 1 keeps ~97% of
     # the level-3 byte saving at snappy's write speed.
     "spark.hadoop.parquet.compression.codec.zstd.level": "1",

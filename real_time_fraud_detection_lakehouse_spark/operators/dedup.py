@@ -998,7 +998,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     check_every: int = 2,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Connected components by iterative min-label propagation:
     every node's label starts as its own id; each round a node adopts
@@ -1019,18 +1018,10 @@ def connected_components(
     ~rounds/check_every driver actions, not one per round. Labels are
     localCheckpoint-ed so lineage stays O(rounds-between-checks).
 
-    ``algorithm="star"`` dispatches to the alternating large-star /
-    small-star rewrite (``connected_components_star``) — the upgrade
-    for adversarial graphs where the EDGE LIST itself must shrink as
-    the algorithm runs (high-degree hubs, edges that barely fit a
-    shuffle). For typical dedup graphs (small diameter, modest
-    degree) propagation + jumping is cheaper per round and stays the
-    default.
+    Round ``max_iter`` is always a check round. Labels still changing
+    there raise ``RuntimeError`` instead of being returned unconverged;
+    ``max_iter`` below 2 leaves no check round and always raises.
     """
-    if algorithm == "star":
-        return connected_components_star(edges, src=src, dst=dst, max_iter=max_iter)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown connected-components algorithm: {algorithm!r}")
     und = edges.selectExpr(f"{src} AS a", f"{dst} AS b").unionAll(
         edges.selectExpr(f"{dst} AS a", f"{src} AS b")
     )
@@ -1077,6 +1068,10 @@ def connected_components(
                 break
         else:
             labels = new_labels
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in max_iter={max_iter} rounds"
+        )
     return labels
 
 
@@ -1152,100 +1147,6 @@ def connected_components_contracted(
     ).select(
         "node",
         F.coalesce("croot", "lab").alias("component"),
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    edge rewriting (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14). Returns (node, component) with
-    component = the minimum node id in the component — same contract
-    as ``connected_components``.
-
-    Each round rewrites the EDGE LIST (instead of a label table):
-
-    - **large-star**: every node links each *larger* neighbor to the
-      minimum of its closed neighborhood — long tendrils collapse
-      toward local minima.
-    - **small-star**: every node links its *smaller* neighbors (and
-      itself) to that minimum — stars centered away from the minimum
-      re-center onto it.
-
-    Convergence (provably O(log^2 n) rounds, O(log n) in practice) is
-    when the edge set reaches a fixpoint: a forest of stars, each
-    centered at its component's global minimum. Scale rationale vs
-    label propagation: the working set *shrinks* every round (a star
-    is the smallest representation of a component), high-degree hubs
-    never fan labels out through a join, and per-round cost is two
-    keyed aggregations + two joins on an ever-smaller edge list. The
-    propagation variant keeps a full |V|-row label table live through
-    every round, which is the right trade only while |E| comfortably
-    fits a shuffle. Edges are localCheckpoint-ed per round (O(1)
-    lineage); the fixpoint check is an exact set comparison (count +
-    one-way exceptAll), both sides distinct by construction.
-    """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # node universe from the RAW input so self-loop-only nodes still
-    # get a (singleton) component row, matching the propagation variant
-    all_nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionAll(edges.select(F.col(dst)))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = e.count()
-    for _ in range(max_iter):
-        # large-star: for each node u, m = min(closed neighborhood);
-        # emit (m, v) for every neighbor v > u
-        und = e.selectExpr("lo AS u", "hi AS v").unionAll(
-            e.selectExpr("hi AS u", "lo AS v")
-        )
-        mins = und.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        ls = (
-            und.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
-        # small-star: edges are (hi -> lo); for each hi, m = min of its
-        # smaller neighbors; emit (m, v) for v in neighbors \ {m} and
-        # (m, hi)
-        m2 = ls.groupBy("hi").agg(F.min("lo").alias("m"))
-        joined = ls.join(m2, "hi")
-        re_centered = joined.filter(F.col("lo") != F.col("m")).select(
-            F.col("m").alias("lo"), F.col("lo").alias("hi")
-        )
-        spokes = joined.select(F.col("m").alias("lo"), F.col("hi").alias("hi"))
-        new_e = (
-            re_centered.unionByName(spokes)
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        new_n = new_e.count()
-        if new_n == n_edges and new_e.exceptAll(e).limit(1).count() == 0:
-            e = new_e
-            break
-        e, n_edges = new_e, new_n
-    # fixpoint = star forest: every hi points at exactly its center;
-    # centers (and isolated input nodes) label themselves
-    centers = e.groupBy(F.col("hi").alias("node")).agg(F.min("lo").alias("centre"))
-    return all_nodes.join(centers, "node", "left").select(
-        "node", F.coalesce("centre", "node").alias("component")
     )
 
 

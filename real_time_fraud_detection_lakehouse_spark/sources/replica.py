@@ -5,8 +5,10 @@ Join keys (orderkey, custkey, suppkey, user/doc/vec ids) are offset
 per copy so joins keep their selectivity and dedup operators find
 real (planted) cross-copy duplicates; pure dimension tables (nation,
 region) are kept as-is so FK arity is preserved. This is the
-machinery behind the standing scaling bench (bench.py) and
-scripts/bench_scale.py.
+machinery behind the scaling phases of bench.py (5 and 5b at 10x;
+6, 6b and 6c at 100x; 5b, 6, 6b and 6c over single-table replicas
+with perturbed text or embeddings) and behind scripts/bench_scale.py;
+both time their entries over it with ``bench.timed``.
 
 Scale note: the replica is built with unionByName of column-shifted
 scans — no shuffle, no driver materialization; the write is the only

@@ -251,10 +251,22 @@ def _stage_upsert(
 ) -> _Upsert:
     """Stage ``updates`` in the table at ``path``; read it back and the
     table directories the upsert merges against (see :func:`upsert_by_key`),
-    both with the updates' schema, so neither read infers it from footers."""
+    both with the updates' schema, so neither read infers it from footers.
+    The staged rows are read by their data files, under the stage as base
+    path: Spark ignores a dot-prefixed root path (with a warning)."""
     cols = [partition_col] if partition_col is not None else []
     stage = stage_write(updates, path, cols)
-    rows = spark.read.schema(updates.schema).parquet(stage.root).select(*updates.columns)
+    staged = [
+        os.path.join(stage.root, part, name)
+        for part in stage.parts
+        for name in _data_files(os.path.join(stage.root, part))
+    ]
+    rows = (
+        spark.read.schema(updates.schema)
+        .option("basePath", stage.root)
+        .parquet(*staged)
+        .select(*updates.columns)
+    )
     whole_table = not cols or isinstance(
         updates.schema[partition_col].dataType, (TimestampType, TimestampNTZType)
     )

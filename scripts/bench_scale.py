@@ -21,18 +21,15 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from real_time_fraud_detection_lakehouse_spark.core.catalog import TESTDATA_TABLES, table
-from real_time_fraud_detection_lakehouse_spark.core.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-COPIES = int(os.environ.get("SPARK_GRAFT_SCALE_COPIES", "10"))
-
+from bench import CPUS, SF_DIR, entry, timed  # noqa: E402
+from lakebench.trace import Tracer  # noqa: E402
+from real_time_fraud_detection_lakehouse_spark.core.session import get_spark  # noqa: E402
 from real_time_fraud_detection_lakehouse_spark.sources.replica import build_replica  # noqa: E402
+
+COPIES = int(os.environ.get("SPARK_GRAFT_SCALE_COPIES", "10"))
 
 QUERIES = [
     "q_pricing_summary",   # wide agg over lineitem
@@ -41,7 +38,7 @@ QUERIES = [
     "dedup_exact",         # hash-agg dedup over documents
     "text_stats",          # pure-projection text ops
     # round-14 fraud screens + the Gopher drop-rule projection
-    # (dashboard names resolve through gold_frames over each dir)
+    # (dashboard names read each dir's materialized medallion)
     "dash_card_amount_anomaly",  # per-card keyed median/MAD
     "dash_velocity_burst",       # per-card RANGE window + max
     "dash_seasonal_anomaly",     # (category x dow) keyed MAD
@@ -68,12 +65,6 @@ QUERIES = [
 
 
 def main() -> None:
-    from real_time_fraud_detection_lakehouse_spark.operators import LLM_OPS
-    from real_time_fraud_detection_lakehouse_spark.plans.dashboards import DASHBOARDS
-    from real_time_fraud_detection_lakehouse_spark.plans.gold import gold_frames
-    from real_time_fraud_detection_lakehouse_spark.plans.relational import RELATIONAL
-    from real_time_fraud_detection_lakehouse_spark.plans.views import VIEWS
-
     spark = get_spark(
         "bench-scale",
         master=f"local[{CPUS}]",
@@ -85,68 +76,26 @@ def main() -> None:
         },
     )
     spark.range(1_000_000).selectExpr("sum(id)").collect()
+    tracer = Tracer(False)
 
     big_dir = tempfile.mkdtemp(prefix="sfscale_")
     try:
-        t0 = time.time()
-        build_replica(spark, SF_DIR, big_dir, copies=COPIES)
-        build_secs = round(time.time() - t0, 1)
-
-        ops = {**RELATIONAL, **LLM_OPS}
-        domain = {**VIEWS, **DASHBOARDS}
-        # materialize the medallion ONCE per sf_dir (bench.py's
-        # warehouse phase, r14 advice): dashboard builders are timed
-        # over MATERIALIZED silver/fact, so each ratio measures the
-        # screen's own scaling — a lazy gold_frames plan would re-run
-        # the whole shared silver ETL inside every timed write and
-        # dilute the per-op signal. fact is a pure narrow projection
-        # of silver and the dims are tiny keyed dedups, so deriving
-        # them lazily from the materialized silver adds only the scan
-        # the screen itself pays.
-        from real_time_fraud_detection_lakehouse_spark.plans import gold as gold_mod
-
-        mat_frames = {}
-        for label, sf_dir in (("sf0.1", SF_DIR), ("sf1", big_dir)):
-            silver_path = os.path.join(big_dir, f"_silver_{label.replace('.', '_')}")
-            gold_frames(spark, sf_dir)["silver"].write.mode("overwrite").parquet(
-                silver_path
-            )
-            silver_mat = spark.read.parquet(silver_path)
-            # "transactions" must stay the RAW source projection per
-            # the gold_frames contract (r15 advice: silver filters
-            # null trans_num and carries the feature projection, so
-            # transaction-scanning screens would otherwise time over a
-            # wider, row-filtered input than in bench.py). The raw
-            # frame is a narrow no-shuffle projection over events —
-            # the same lazy plan bench.py's gold_frames hands out, so
-            # cross-suite ratios stay comparable.
-            from real_time_fraud_detection_lakehouse_spark.sources.transactions import (
-                transactions_df,
-            )
-
-            mat_frames[label] = {
-                "transactions": transactions_df(spark, sf_dir),
-                "silver": silver_mat,
-                "fact": gold_mod.fact_transactions(silver_mat),
-                "dim_customer": gold_mod.dim_customer(silver_mat),
-                "dim_merchant": gold_mod.dim_merchant(silver_mat),
-                "dim_time": gold_mod.dim_time(silver_mat),
-                "dim_location": gold_mod.dim_location(silver_mat),
-            }
+        build_secs = timed(
+            tracer, "replica_build",
+            lambda: build_replica(spark, SF_DIR, big_dir, copies=COPIES), n=1,
+        )
+        # dashboard builders are timed over the medallion materialized
+        # once per sf_dir (bench.medallion_frames), so each ratio
+        # measures the screen's own scaling, not the shared silver ETL
         results = {}
+        frames_cache: dict = {}
         for name in QUERIES:
-            builder, _ = ops[name] if name in ops else domain[name]
             per_sf = {}
             for label, sf_dir in (("sf0.1", SF_DIR), ("sf1", big_dir)):
-                if name in ops:
-                    frames = {t: table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-                else:
-                    frames = mat_frames[label]
-                q = builder(frames)
-                q.write.format("noop").mode("overwrite").save()  # warm-up
-                t0 = time.time()
-                q.write.format("noop").mode("overwrite").save()
-                per_sf[label] = round(time.time() - t0, 3)
+                warehouse = os.path.join(big_dir, f"_medallion_{label}")
+                builder, frames = entry(spark, name, frames_cache, sf_dir, warehouse)
+                # min-of-2: the first sample is the warm-up
+                per_sf[label] = timed(tracer, f"{name}/{label}", lambda: builder(frames))
             per_sf["ratio"] = round(per_sf["sf1"] / per_sf["sf0.1"], 2)
             results[name] = per_sf
             print(f"# {name}: {per_sf}", file=sys.stderr, flush=True)

@@ -1,7 +1,9 @@
 """Dump .explain("formatted") for named entries and count their plan nodes.
 
 Lazy builders run no Spark job here; builders that run actions at
-build time, such as the iterative ring CC, still run them. Writes
+build time, such as the iterative ring CC, still run them, and views
+and dashboards first materialize the medallion once into a temporary
+directory (``bench.medallion_frames``), as the bench times them. Writes
 <out_dir>/<entry>_<tag>.txt per entry and prints one line per entry
 with the InMemoryTableScan / Exchange / BroadcastExchange node counts,
 so two checkouts can be compared for plan-shape changes. Nodes under
@@ -17,7 +19,9 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -61,31 +65,19 @@ def main() -> None:
         extra_conf={"spark.sql.shuffle.partitions": "32"},
     )
 
-    from real_time_fraud_detection_lakehouse_spark.core.catalog import (
-        DEFAULT_SF_DIR as SF_DIR,
-        TESTDATA_TABLES,
-        table,
-    )
-    from real_time_fraud_detection_lakehouse_spark.operators import LLM_OPS
-    from real_time_fraud_detection_lakehouse_spark.plans.dashboards import DASHBOARDS
-    from real_time_fraud_detection_lakehouse_spark.plans.gold import gold_frames
-    from real_time_fraud_detection_lakehouse_spark.plans.relational import RELATIONAL
-    from real_time_fraud_detection_lakehouse_spark.plans.views import VIEWS
-
-    ops = {**RELATIONAL, **LLM_OPS}
-    registry = {**VIEWS, **DASHBOARDS}
-    frames = {t: table(spark, SF_DIR, t) for t in TESTDATA_TABLES}
-    gf = gold_frames(spark, SF_DIR)
+    from bench import entry
+    from real_time_fraud_detection_lakehouse_spark.core.catalog import DEFAULT_SF_DIR
 
     os.makedirs(out_dir, exist_ok=True)
+    warehouse = tempfile.mkdtemp(prefix="explain_")
+    frames_cache: dict = {}
     for name in names:
-        if name in ops:
-            df = ops[name][0](frames)
-        elif name in registry:
-            df = registry[name][0](gf)
-        else:
+        try:
+            builder, frames = entry(spark, name, frames_cache, DEFAULT_SF_DIR, warehouse)
+        except KeyError:
             print(f"SKIP unknown entry {name}", file=sys.stderr)
             continue
+        df = builder(frames)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
@@ -95,6 +87,7 @@ def main() -> None:
             fh.write(plan)
         counts = " ".join(f"{k}={v}" for k, v in node_counts(plan).items())
         print(f"{name} {counts}")
+    shutil.rmtree(warehouse, ignore_errors=True)
     spark.stop()
 
 

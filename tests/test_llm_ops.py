@@ -343,16 +343,15 @@ def test_connected_components_transitive_chain(spark):
     assert got == {10: 10, 20: 10, 30: 10, 40: 10, 100: 100, 200: 100}
 
 
-def test_connected_components_star_high_diameter():
-    """The large-star/small-star variant resolves a planted
+def test_connected_components_high_diameter():
+    """Propagation with pointer jumping resolves a planted
     high-diameter path graph (diameter 120 — label propagation
-    without jumping would need 120 rounds, with jumping ~7) to the
-    same min-labeled components as the propagation variant, within
-    its O(log^2 n) round budget."""
+    without jumping would need 120 rounds, with jumping ~7) plus a
+    disjoint triangle to the min-labeled components, well inside the
+    default round budget."""
     from real_time_fraud_detection_lakehouse_spark.core.session import get_spark
     from real_time_fraud_detection_lakehouse_spark.operators.dedup import (
         connected_components,
-        connected_components_star,
     )
 
     spark = get_spark("test")
@@ -363,16 +362,21 @@ def test_connected_components_star_high_diameter():
         chain + [(500, 501), (501, 502), (502, 500)], ["src", "dst"]
     )
     want = {i: 0 for i in range(121)} | {500: 500, 501: 500, 502: 500}
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components_star(edges, max_iter=20).collect()
-    }
-    assert star == want
-    via_flag = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, algorithm="star").collect()
-    }
-    assert via_flag == want
+    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    assert got == want
+
+
+def test_connected_components_raises_when_unconverged(spark):
+    """Labels still changing at ``max_iter`` are an error, not a
+    silently truncated answer: a 20-link chain needs more than two
+    propagation rounds."""
+    from real_time_fraud_detection_lakehouse_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(20)], "src int, dst int")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iter=2)
 
 
 def test_connected_components_contracted_equals_propagation(spark):

@@ -3,6 +3,7 @@ toPandas bridge (M4), faithful gold dims."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -246,3 +247,50 @@ def test_bench_flag_movers_trips_on_synthetic_slowdown():
     assert bench._flag_movers(zero_cur, zero_prior) == [("z", 0.0, 9.0)]
     # and the reverse direction (current side stored as 0.0)
     assert bench._flag_movers(zero_prior, zero_cur) == [("z", 9.0, 0.0)]
+
+
+def test_bench_timer_spans_every_sample(spark):
+    """bench.timed: min of N samples, one span per sample with the
+    builder's and the action's share as the call's extra, the cold
+    first sample told apart by its span index."""
+    import bench
+    from lakebench.trace import Tracer
+
+    tracer = Tracer(False)
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.range(10).selectExpr("sum(id)")
+
+    best = bench.timed(tracer, "tiny", build, n=3)
+    assert len(built) == 3
+    assert [(c.span, c.index) for c in tracer.calls] == [("tiny", 0), ("tiny", 1), ("tiny", 2)]
+    assert best == round(min(c.wall_ms for c in tracer.calls) / 1000.0, 3)
+    for c in tracer.calls:
+        assert set(c.extra) == {"build_ms", "exec_ms"}
+        assert 0 <= c.extra["build_ms"] + c.extra["exec_ms"] <= c.wall_ms
+    # a second timing of the same span continues its index: only the
+    # span's first call in a session is cold
+    bench.timed(tracer, "tiny", lambda: None, n=1)
+    assert tracer.calls[-1].index == 3
+
+
+def test_bench_medallion_frames_match_gold_frames(spark, tmp_path):
+    """The bench's materialized medallion hands out ``gold_frames``'
+    frames: the same names, and ``transactions`` is the raw source
+    (not the filtered, wider silver), schema-equal to gold_frames'."""
+    import bench
+
+    from real_time_fraud_detection_lakehouse_spark.plans.gold import gold_frames
+
+    frames = bench.medallion_frames(spark, SF_SMALL, str(tmp_path))
+    lazy = gold_frames(spark, SF_SMALL)
+    assert set(frames) == set(lazy)
+    assert frames["transactions"].schema == lazy["transactions"].schema
+    # the entry lookup resolves views over these frames and raises on
+    # an unregistered name
+    builder, got = bench.entry(spark, "daily_summary", {}, SF_SMALL, str(tmp_path))
+    assert set(got) == set(lazy) and callable(builder)
+    with pytest.raises(KeyError):
+        bench.entry(spark, "no_such_entry", {}, SF_SMALL, str(tmp_path))
